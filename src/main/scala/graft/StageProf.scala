@@ -17,18 +17,14 @@ object StageProf {
     val name = args.headOption.getOrElse("q98_pagerank")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    // diagnostic-only conf overrides: SPARK_GRAFT_CONF_EXTRA="k=v,k=v"
-    sys.env.get("SPARK_GRAFT_CONF_EXTRA").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b.config(k, v)
-    })
-    val spark = b.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
@@ -70,8 +66,7 @@ object StageProf {
     t0.set(System.currentTimeMillis())
     spark.sparkContext.addSparkListener(listener)
     import org.apache.spark.metrics.source.CodegenMetrics
-    val (c0, ct0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-      CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum)
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t = System.nanoTime()
     SparkEntry.queries(name)(spark, sfDir).count()
     val sec = (System.nanoTime() - t) / 1e9

@@ -644,14 +644,8 @@ object GraftFunctions {
       def bare(ref: String) = ref.drop(ref.indexOf('/') + 1)
       val dv = VersionedTable.deleteVectors(spark, root, version)
       val eds = VersionedTable.equalityDeletes(spark, root, version)
-      def edScoped(ref: String): Boolean = {
-        val seq = ref.takeWhile(_ != '/') match {
-          case s if s.startsWith("_v-") => s.drop(3).toLongOption.getOrElse(0L)
-          case s if s.startsWith("v=") => s.drop(2).toLongOption.getOrElse(0L)
-          case _ => 0L
-        }
-        eds.exists(seq <= _.seq)
-      }
+      def edScoped(ref: String): Boolean =
+        eds.exists(VersionedTable.refSeq(ref) <= _.seq)
       val rows = files.flatMap { ref =>
         val s = statOf.get(ref).orElse(statOf.get(bare(ref)))
         val deleted = dv.get(ref).map(_._2).getOrElse(0L)

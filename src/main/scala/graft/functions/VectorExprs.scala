@@ -199,10 +199,13 @@ object DecDot {
     * exploded products (valueOf = the toString-shortest-repr
     * conversion Spark's double→decimal cast performs; HALF_UP is the
     * cast's rounding; the exact integer sum re-associates freely).
-    * Element pairs where either side is null are skipped (a null
-    * product never reaches a decimal sum). Returns NaN when no element
-    * contributed — the exploded form emits NO group for that pair, so
-    * callers must (and do) sit behind a `>=` filter both forms fail.
+    * A product the cast turns into null is skipped, as `sum` skips
+    * it: either element null, a NaN or ±Inf product, or one of 1e16
+    * or more in magnitude (past decimal(28,12)'s 16 integer digits;
+    * doubles that large are integers, so rounding cannot cross the
+    * bound). Returns NaN when no product contributed — `sum`'s null,
+    * which [[DotProductDec12]] surfaces as null (an exact decimal sum
+    * never converts to NaN, so the sentinel is unambiguous).
     * tag: 0 = double, 1 = float, 2 = byte element reads. */
   def dot12(x: ArrayData, y: ArrayData, tagA: Int, tagB: Int): Double = {
     val n = math.min(x.numElements(), y.numElements())
@@ -216,9 +219,11 @@ object DecDot {
     var slow: java.math.BigDecimal = null // exact fallback on overflow
     var i = 0
     while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i)) {
+      val p = if (x.isNullAt(i) || y.isNullAt(i)) Double.NaN
+        else rd(x, i, tagA) * rd(y, i, tagB)
+      if (math.abs(p) < 1e16) { // false for NaN and ±Inf too
         any = true
-        val t = java.math.BigDecimal.valueOf(rd(x, i, tagA) * rd(y, i, tagB))
+        val t = java.math.BigDecimal.valueOf(p)
           .setScale(12, java.math.RoundingMode.HALF_UP)
         if (slow ne null) slow = slow.add(t)
         else {
@@ -262,14 +267,20 @@ case class DotProductDec12(left: Expression, right: Expression)
 
   override def prettyName: String = "dot_product_dec12"
 
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DecDot.dot12(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      DecDot.tagOf(left), DecDot.tagOf(right))
+  // null when no product contributed, like `sum` over no values
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val d = DecDot.dot12(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData], DecDot.tagOf(left), DecDot.tagOf(right))
+    if (d.isNaN) null else d
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""${ev.value} = graft.functions.DecDot.dot12(
          |  $a, $b, ${DecDot.tagOf(left)}, ${DecDot.tagOf(right)});
+         |${ev.isNull} = Double.isNaN(${ev.value});
        """.stripMargin)
 
   override protected def withNewChildrenInternal(

@@ -270,55 +270,9 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
     report
   }
 
-  /** Adopt batch objects published by the pre-`data/` layout (they
-    * lived directly under `corpusDir/batch-*.parquet`): one atomic
-    * rename each into `corpusDataDir`, so the versioned commit, the
-    * model-retrain label reads, and the retrieval fold all see them
-    * again after an upgrade — without this they silently vanish while
-    * the near-dup history postings still claim their docs exist.
-    * Idempotent across crashes: objects are immutable and tag-named
-    * (same tag ⇒ same content by the publish protocol), so a replay
-    * that finds the target already present just drops the leftover
-    * source. */
-  private def adoptLegacyCorpusObjects(
-      cc: Automation.CorpusDedupConfig): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(cc.corpusDir),
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(cc.corpusDir)
-    if (!fs.exists(root)) return
-    val legacy = fs.listStatus(root).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith("batch-") && n.endsWith(".parquet")
-      }
-    if (legacy.nonEmpty) {
-      val dd = new org.apache.hadoop.fs.Path(cc.corpusDataDir)
-      fs.mkdirs(dd)
-      legacy.foreach { src =>
-        val dst = new org.apache.hadoop.fs.Path(dd, src.getName)
-        if (fs.exists(dst)) fs.delete(src, true)
-        else {
-          // Two adopters can both pass the !exists probe (unleased run
-          // or a lease-TTL edge); rename arbitrates — the loser must
-          // TREAT already-adopted as success (same tag ⇒ same content
-          // by the publish protocol), not crash the tick.
-          val renamed = try fs.rename(src, dst)
-            catch { case _: java.io.IOException => false }
-          if (!renamed) {
-            require(fs.exists(dst),
-              s"legacy corpus object adoption failed: $src -> $dst")
-            if (fs.exists(src)) fs.delete(src, true)
-          }
-        }
-      }
-    }
-  }
-
   /** Whether any published corpus batch objects exist yet. */
   private def corpusHasObjects(
       cc: Automation.CorpusDedupConfig): Boolean = {
-    adoptLegacyCorpusObjects(cc)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(cc.corpusDir),
       spark.sparkContext.hadoopConfiguration)
@@ -337,7 +291,6 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
     * version the catalog should pin. */
   private def commitCorpusTable(
       cc: Automation.CorpusDedupConfig): Long = {
-    adoptLegacyCorpusObjects(cc)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(cc.corpusDir),
       spark.sparkContext.hadoopConfiguration)
@@ -378,7 +331,6 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
       cc: Automation.CorpusDedupConfig): Automation.CorpusReport = {
     import org.apache.spark.sql.SaveMode
     import org.apache.spark.sql.functions.col
-    adoptLegacyCorpusObjects(cc)
     val load = IncrementalLoader.run(spark, cc.srcDir, cc.rawTableDir,
       cc.registryDir, cc.schema, cc.format)
     val fs = org.apache.hadoop.fs.FileSystem.get(

@@ -125,7 +125,8 @@ object Catalog {
     * carries a `h\t<tableCount>` header, so a truncation — whether
     * mid-line (parse failure) or at a line boundary (silently fewer
     * tables) — is detected and re-read briefly before failing loudly.
-    * Headerless objects from earlier layouts parse as before. */
+    * A body without a valid header, the empty body included, is always
+    * torn: that is the created-but-unwritten window. */
   def snapshotAsOf(spark: SparkSession, catRoot: String,
       version: Long): Snapshot = {
     val fs = fsOf(spark, catRoot)
@@ -133,67 +134,46 @@ object Catalog {
     require(fs.exists(p),
       s"catalog version $version of $catRoot does not exist")
     var lastErr = "unreadable"
-    var allEmpty = true
     (0 until 20).foreach { _ =>
       val in = fs.open(p)
       val body =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      if (body.nonEmpty) allEmpty = false
       parseCatalog(body) match {
         case Right(tables) => return Snapshot(version, tables)
         case Left(err) => lastErr = err; Thread.sleep(25)
       }
     }
-    // A body that stayed EXACTLY "" across every retry is a truly-empty
-    // legacy (headerless, zero-table) catalog, which must stay
-    // readable. It is accepted only HERE — after the retry loop — so a
-    // created-but-unwritten object mid-PUT (the torn-prefix window on
-    // no-hardlink filesystems) is never served as an authoritative
-    // empty snapshot on first read.
-    if (allEmpty) return Snapshot(version, Map.empty)
     throw new IllegalStateException(
       s"catalog object $p stayed torn across retries ($lastErr) — " +
         "the writer likely crashed mid-PUT on a no-hardlink filesystem")
   }
 
   /** Right(tables) for a whole object; Left(reason) for a torn one.
-    * A body whose first line carries neither the `h\t` header nor a
-    * `t\t` table line — including "" and a truncated header prefix
-    * like "h" — is TORN, not a legacy empty object: the
+    * A body whose first line is not a whole `h\t<count>` header —
+    * including "" and a truncated prefix like "h" — is TORN: the
     * created-but-unwritten window on filesystems without hard links
     * looks exactly like that, and serving it as an authoritative
-    * empty snapshot would erase every table from readers' view.
-    * ([[snapshotAsOf]] accepts a stable "" after retries exhaust.) */
+    * empty snapshot would erase every table from readers' view. */
   private def parseCatalog(
       body: String): Either[String, Map[String, (String, Long)]] = {
     val lines = body.split("\n").toSeq
-    val expected = lines.headOption match {
-      case Some(h) if h.startsWith("h\t") => h.split("\t") match {
-        case Array(_, n) => n.toIntOption match {
-          case Some(c) => Some(c)
-          case None => return Left(s"torn header '$h'")
-        }
-        case _ => return Left(s"torn header '$h'")
-      }
-      case Some(t) if t.startsWith("t\t") => None // legacy headerless object
-      case _ => return Left(
-        s"torn prefix '${body.take(16)}' — first line is neither 'h\\t' nor 't\\t'")
+    val expected = lines.headOption.getOrElse("").split("\t") match {
+      case Array("h", n) if n.toIntOption.isDefined => n.toInt
+      case _ => return Left(s"torn header '${body.take(16)}'")
     }
-    val parsed = lines.filter(_.startsWith("t\t")).map { line =>
+    val parsed = lines.tail.map { line =>
       line.split("\t") match {
-        case Array(_, name, root, v) => v.toLongOption match {
+        case Array("t", name, root, v) => v.toLongOption match {
           case Some(ver) => name -> (root, ver)
           case None => return Left(s"torn line '$line'")
         }
         case _ => return Left(s"torn line '$line'")
       }
     }
-    expected match {
-      case Some(c) if parsed.size != c =>
-        Left(s"header says $c tables, object carries ${parsed.size}")
-      case _ => Right(parsed.toMap)
-    }
+    if (parsed.size != expected)
+      Left(s"header says $expected tables, object carries ${parsed.size}")
+    else Right(parsed.toMap)
   }
 
   /** Read one table at its catalog-pinned version (current snapshot).

@@ -45,15 +45,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `_v-N` / `_commits` are invisible to a flat `read(root)` while an
   * explicitly-addressed `_v-N` still reads normally.
   *
-  * Legacy layouts stay readable: round-2 `v=N` dirs resolve by the
-  * old highest-complete-version scan, flat parquet files read as
-  * version 0; the first commit migrates either to manifests. Single
-  * writer (the automation daemon); readers in other processes are
-  * safe at any crash point.
+  * A root without `_commits` is a flat, never-committed table (the
+  * loaders' appendable paths write those): its parquet files read as
+  * version 0 and the first commit supersedes them. Single writer (the
+  * automation daemon); readers in other processes are safe at any
+  * crash point.
   */
 object VersionedTable {
 
-  private val LegacyVer = "^v=(\\d+)$".r
   private val HiddenVer = "^_v-(\\d+)$".r
   private val AttemptVer = "^_v-(\\d+)-w.*$".r
 
@@ -69,34 +68,20 @@ object VersionedTable {
 
   private def commitsDir(root: String) = new Path(s"$root/_commits")
 
-  /** Highest committed version: max manifest under `_commits`, or the
-    * legacy highest-complete-`v=N` scan for pre-manifest tables. */
+  /** Highest committed version: max manifest under `_commits`; None
+    * for a never-committed table. */
   def currentVersion(spark: SparkSession, root: String): Option[Long] = {
     val fs = fsOf(spark, root)
     val cd = commitsDir(root)
-    if (fs.exists(cd)) {
-      fs.listStatus(cd).toSeq
-        .flatMap(st => st.getPath.getName.toLongOption)
-        .maxOption
-    } else legacyVersion(fs, root)
-  }
-
-  /** Round-2 layout: highest `v=N` dir holding a `_SUCCESS`. */
-  private def legacyVersion(fs: FileSystem, root: String): Option[Long] = {
-    val p = new Path(root)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case LegacyVer(n) if st.isDirectory &&
-          fs.exists(new Path(st.getPath, "_SUCCESS")) => Some(n.toLong)
-        case _ => None
-      }
-    }.maxOption
+    if (!fs.exists(cd)) None
+    else fs.listStatus(cd).toSeq
+      .flatMap(st => st.getPath.getName.toLongOption)
+      .maxOption
   }
 
   /** The data dir version `n`'s manifest points at: an explicit
     * `d`-line (optimistic commits use attempt-unique dir names), else
-    * the conventional `_v-n` / legacy `v=n`. */
+    * the conventional `_v-n`. */
   private def dataDirOf(fs: FileSystem, root: String, n: Long): String = {
     val p = new Path(commitsDir(root), n.toString)
     val pointed =
@@ -108,13 +93,7 @@ object VersionedTable {
           finally in.close()
         content.split("\n").find(_.startsWith("d\t")).map(_.drop(2))
       }
-    pointed match {
-      case Some(dir) => s"$root/$dir"
-      case None =>
-        val hidden = s"$root/_v-$n"
-        if (fs.exists(new Path(hidden))) hidden
-        else s"$root/v=$n" // manifest migrated from a legacy layout
-    }
+    s"$root/${pointed.getOrElse(s"_v-$n")}"
   }
 
   /** Directory `read` resolves: the current version's data dir, or
@@ -430,16 +409,9 @@ object VersionedTable {
       audit: Option[DataFrame => Seq[String]])
       (writer: String => Unit): Long = {
     val fs = fsOf(spark, root)
-    fs.mkdirs(new Path(root))
-    // Activate the manifest protocol BEFORE any data lands: a legacy
-    // `v=N` table gets a manifest for its current version first, so a
-    // crash later in this commit can never make resolution fall back
-    // to the legacy scan and pick up our unpublished data dir.
-    val cd = commitsDir(root)
-    if (!fs.exists(cd)) legacyVersion(fs, root) match {
-      case Some(n) => publishManifest(fs, root, n)
-      case None    => fs.mkdirs(cd)
-    }
+    // `_commits` exists before any data lands, so resolution runs
+    // through manifests from this commit's first write on
+    fs.mkdirs(commitsDir(root))
     val base = currentVersion(spark, root)
     val next = base.getOrElse(0L) + 1L
     val data = new Path(s"$root/_v-$next")
@@ -472,9 +444,8 @@ object VersionedTable {
       .filter(_.nonEmpty).mkString("\n")
     // THE commit point: one object's existence flips visibility
     publishManifest(fs, root, next, payload)
-    // prune data dirs (both layouts) and manifests older than the
-    // retention window, stale round-2 staging dirs, and
-    // pre-versioning flat files (unreachable once versioned)
+    // prune data dirs and manifests older than the retention window,
+    // and pre-versioning flat files (unreachable once versioned)
     prune(fs, root, next - math.max(1, keepVersions))
     next
   }
@@ -519,12 +490,7 @@ object VersionedTable {
       constraintsOverride: Option[Seq[(String, String)]] = None)
       (writer: String => Unit): Long = {
     val fs = fsOf(spark, root)
-    fs.mkdirs(new Path(root))
-    val cd = commitsDir(root)
-    if (!fs.exists(cd)) legacyVersion(fs, root) match {
-      case Some(n) => publishManifest(fs, root, n)
-      case None    => fs.mkdirs(cd)
-    }
+    fs.mkdirs(commitsDir(root))
     carried.foreach { r =>
       require(r.nonEmpty && !r.startsWith("/") && !r.contains("..") &&
         r.count(_ == '/') == 1,
@@ -755,15 +721,7 @@ object VersionedTable {
       dedupeNewByName: Boolean = false)
       (writer: String => Unit): Long = {
     val fs = fsOf(spark, root)
-    fs.mkdirs(new Path(root))
-    val cd = commitsDir(root)
-    if (!fs.exists(cd)) legacyVersion(fs, root) match {
-      case Some(n) =>
-        // a racing writer may bootstrap the same legacy version first
-        try publishManifest(fs, root, n)
-        catch { case _: CommitConflictException => () }
-      case None => fs.mkdirs(cd)
-    }
+    fs.mkdirs(commitsDir(root))
     var staged: Option[(Path, Seq[String])] = None
     var attempt = 0
     while (true) {
@@ -860,8 +818,6 @@ object VersionedTable {
         // never the live table, never an in-flight attempt (those
         // target versions > cutoff)
         case AttemptVer(n) if n.toLong <= cutoff => fs.delete(st.getPath, true)
-        case LegacyVer(n) if n.toLong <= cutoff => fs.delete(st.getPath, true)
-        case _ if name.startsWith("_stage_v=") => fs.delete(st.getPath, true)
         case _ if st.isFile => fs.delete(st.getPath, false)
         case _ => ()
       }
@@ -1021,17 +977,17 @@ object VersionedTable {
   }
 
   /** The version-dir sequence a root-relative file ref was written
-    * at; pre-versioning refs read as 0 (oldest — always in scope). */
-  private def refSeq(ref: String): Long = ref.takeWhile(_ != '/') match {
+    * at; refs outside a `_v-N` dir read as 0 (oldest — always in
+    * scope). */
+  private[graft] def refSeq(ref: String): Long = ref.takeWhile(_ != '/') match {
     case HiddenVer(n) => n.toLong
-    case LegacyVer(n) => n.toLong
     case _ => 0L
   }
 
   /** Column twin of [[refSeq]] over a [[DvFileCol]]-style ref. */
   private def refSeqCol(ref: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
-    val digits = regexp_extract(ref, "^(?:_v-|v=)(\\d+)/", 1)
+    val digits = regexp_extract(ref, "^_v-(\\d+)/", 1)
     when(digits === "", lit(0L)).otherwise(digits.cast("long"))
   }
 
@@ -1660,7 +1616,7 @@ object VersionedTable {
     * = manifest mtime, n_files, delta = file-list commit, data_dir,
     * tags). Metadata-only: one `_commits` listing + one listing per
     * whole-dir version; file-list versions count their f-lines. A
-    * pre-manifest (legacy) table has no log → empty. SQL surface:
+    * never-committed (flat) table has no log → empty. SQL surface:
     * `graft_history('root')`. */
   def history(spark: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.Row
@@ -2274,12 +2230,7 @@ object VersionedTable {
       maxRetries: Int = 5)
       (compute: Option[DataFrame] => DataFrame): Long = {
     val fs = fsOf(spark, root)
-    fs.mkdirs(new Path(root))
-    val cd = commitsDir(root)
-    if (!fs.exists(cd)) legacyVersion(fs, root) match {
-      case Some(n) => publishManifest(fs, root, n)
-      case None    => fs.mkdirs(cd)
-    }
+    fs.mkdirs(commitsDir(root))
     var attempt = 0
     while (true) {
       val base = currentVersion(spark, root)
@@ -2325,16 +2276,14 @@ object VersionedTable {
     * names, unreferenced by any manifest) but hold real bytes forever.
     *
     * A dir is deleted iff it is (a) a versioning-internal name
-    * (`_v-N`, `_v-N-w*` attempt, round-2 `_stage_v=*`), (b) referenced
-    * by NO retained manifest — the manifest set is the ground truth
-    * for liveness, exactly as in reads — and (c) older than
-    * `olderThanMs`. Age is the safety gate against deleting a LIVE
-    * writer's in-flight attempt (its dir is younger than any sane
-    * threshold; Delta/Iceberg vacuum make the same time-based
-    * bargain). Legacy `v=N` dirs are never touched: a pre-manifest
-    * table's liveness is not manifest-determined, so there is nothing
-    * safe to reclaim — and a table with no `_commits` at all vacuums
-    * nothing. Returns the deleted paths. */
+    * (`_v-N`, `_v-N-w*` attempt, `_v-b-*` branch stage), (b)
+    * referenced by NO retained manifest or branch — the manifest set
+    * is the ground truth for liveness, exactly as in reads — and (c)
+    * older than `olderThanMs`. Age is the safety gate against deleting
+    * a LIVE writer's in-flight attempt (its dir is younger than any
+    * sane threshold; Delta/Iceberg vacuum make the same time-based
+    * bargain). A table with no `_commits` has no manifest-determined
+    * liveness, so it vacuums nothing. Returns the deleted paths. */
   def vacuum(spark: SparkSession, root: String,
       olderThanMs: Long): Seq[String] = {
     val fs = fsOf(spark, root)
@@ -2358,7 +2307,7 @@ object VersionedTable {
         case AttemptVer(_) => true
         // a crashed dropBranch's orphan stage dirs (no branch ref, no
         // manifest reference) age out here like any other orphan
-        case _ => name.startsWith("_stage_v=") || name.startsWith("_v-b-")
+        case _ => name.startsWith("_v-b-")
       }
       internal && !referenced.contains(name) &&
         st.getModificationTime < cutoff

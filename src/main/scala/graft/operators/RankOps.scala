@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DateType,
+  LongType, NumericType, StringType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Exact global ranking WITHOUT a single-reducer window.
@@ -95,6 +96,15 @@ object RankOps {
     val schema = sorted.schema
     val gIdx = groupCols.map(schema.fieldIndex).toArray
     val gTypes: Array[DataType] = gIdx.map(schema(_).dataType)
+    // keys are lifted off the reused row buffer and compared by value:
+    // only atomic types survive that (an array/struct/map would stay
+    // buffer-backed, a binary key would compare by reference)
+    groupCols.zip(gTypes).foreach { case (c, dt) =>
+      require(atomicKey(dt),
+        s"withGroupedPrefixSum group key '$c' has type ${dt.simpleString}; " +
+          "only numeric, string, boolean, date and timestamp keys are " +
+          "supported")
+    }
     val vIdx = schema.fieldIndex(valueCol)
     // InternalRow passes (r14): `df.rdd` boxed every field of every
     // row into a GenericRow — measured ~30 µs/row across the RankOps
@@ -185,6 +195,14 @@ object RankOps {
     }
     org.apache.spark.sql.graftbridge.Bridge.fromInternalRows(
       spark, out, schema.add(sumCol, LongType, nullable = false))
+  }
+
+  // StringType matches the binary collation only: a collated string
+  // key would group by bytes where SQL groups by collation
+  private def atomicKey(dt: DataType): Boolean = dt match {
+    case _: NumericType | StringType | BooleanType | DateType |
+         TimestampType | TimestampNTZType => true
+    case _ => false
   }
 
   /** SQL NTILE(k) bucket from a 1-based global rank over n rows:

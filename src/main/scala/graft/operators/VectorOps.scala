@@ -32,10 +32,9 @@ object VectorOps {
     * explode→cast→decimal-sum pipeline (same per-element scale-12
     * HALF_UP rounding, exact sum, one double conversion) without the
     * per-element explode, the vec-keyed aggregate exchange, or the
-    * decimal buffer churn. (Divergence only for a vector with NO
-    * contributing elements — absent before, NaN now; embeddings are
-    * fixed-dim non-null, and every consumer sits behind joins/filters
-    * both forms fail.) */
+    * decimal buffer churn. (A vector with NO contributing elements
+    * was absent before and is a null norm now; every consumer sits
+    * behind joins/filters both forms fail.) */
   private def norms(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
       sqrt(graft.functions.GraftFunctions.dotProductDec12(

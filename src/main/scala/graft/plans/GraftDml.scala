@@ -410,7 +410,7 @@ object GraftMergeCommand extends PredicateHelper {
   * version. Positional column matching with implicit casts (standard
   * INSERT semantics; arity mismatch fails loudly), `BY NAME` matches
   * case-insensitively. An uncommitted root is created by the first
-  * insert (its first commit migrates legacy layouts). */
+  * insert (its first commit supersedes a flat table). */
 case class GraftInsertCommand(root: String, query: LogicalPlan,
     overwrite: Boolean, byName: Boolean) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Nil

@@ -149,8 +149,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("torn catalog objects are retryable, never authoritative: " +
-      "truncated bodies fail loudly after retries; legacy headerless " +
-      "objects still parse") {
+      "truncated and headerless bodies fail loudly after retries") {
     val cat = tmpDir("cat-torn")
     val t1 = tmpDir("cat-torn-t1")
     writeVersion(t1, 1 to 5)
@@ -178,16 +177,19 @@ class CatalogSpec extends SparkSpec {
       Catalog.snapshotAsOf(spark, cat, 8L)
     }
     assert(e2.getMessage.contains("torn"), e2.getMessage)
-    // legacy headerless object (pre-header layout) parses as before
+    // a body without the header is torn too, even when every table
+    // line parses: a header-line truncation looks exactly like that
     java.nio.file.Files.write(dir.resolve("9"),
-      s"t\tlegacy\t$t1\t1".getBytes("UTF-8"))
-    assert(Catalog.snapshotAsOf(spark, cat, 9L).tables
-      .get("legacy").exists(_._2 == 1L))
+      s"t\tnohead\t$t1\t1".getBytes("UTF-8"))
+    val e3 = intercept[IllegalStateException] {
+      Catalog.snapshotAsOf(spark, cat, 9L)
+    }
+    assert(e3.getMessage.contains("torn"), e3.getMessage)
   }
 
   test("created-but-unwritten catalog objects are TORN, not an " +
       "authoritative empty snapshot (ADVICE r9): header prefixes fail " +
-      "loudly; only a STABLE zero-byte body is legacy-empty") {
+      "loudly, a zero-byte body included") {
     val cat = tmpDir("cat-prefix")
     val t1 = tmpDir("cat-prefix-t1")
     writeVersion(t1, 1 to 3)
@@ -209,12 +211,13 @@ class CatalogSpec extends SparkSpec {
       Catalog.snapshotAsOf(spark, cat, 6L)
     }
     assert(e2.getMessage.contains("torn"), e2.getMessage)
-    // a zero-byte body that STAYS zero-byte across the retry loop is a
-    // truly-empty legacy catalog — readable, zero tables (accepted
-    // only after retries exhaust, never on first read)
+    // a zero-byte body that STAYS zero-byte across the retry loop is
+    // a PUT that never wrote — torn, never an empty snapshot
     java.nio.file.Files.write(dir.resolve("7"), Array.emptyByteArray)
-    val snap = Catalog.snapshotAsOf(spark, cat, 7L)
-    assert(snap.tables.isEmpty)
+    val e3 = intercept[IllegalStateException] {
+      Catalog.snapshotAsOf(spark, cat, 7L)
+    }
+    assert(e3.getMessage.contains("torn"), e3.getMessage)
     // ...and a writer finishing the PUT mid-retry wins: start a
     // reader against "h", complete the object concurrently, the
     // reader returns the completed snapshot instead of failing

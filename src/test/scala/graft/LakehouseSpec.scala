@@ -545,8 +545,7 @@ class LakehouseSpec extends SparkSpec {
     VersionedTable.rewrite(spark, root, keepVersions = 10)(df =>
       df.union(Seq((2L, "b")).toDF("id", "v")))
     // synthesize every orphan class a crash can leave: an optimistic
-    // loser's attempt dir, a plain commit that died pre-manifest, and
-    // a round-2 staging leftover
+    // loser's attempt dir and a plain commit that died pre-manifest
     def mkOrphan(name: String): java.io.File = {
       val d = new java.io.File(root, name)
       d.mkdirs()
@@ -557,8 +556,7 @@ class LakehouseSpec extends SparkSpec {
     val old = System.currentTimeMillis() - 48L * 3600 * 1000
     val loser = mkOrphan("_v-9-wdeadbeef")
     val crashed = mkOrphan("_v-7")
-    val staging = mkOrphan("_stage_v=3")
-    Seq(loser, crashed, staging).foreach { d =>
+    Seq(loser, crashed).foreach { d =>
       d.listFiles().foreach(_.setLastModified(old)); d.setLastModified(old)
     }
     // a RETAINED old version must survive on age alone: age the v1 dir
@@ -571,17 +569,18 @@ class LakehouseSpec extends SparkSpec {
 
     val deleted = VersionedTable.vacuum(spark, root, 3600 * 1000L)
     assert(deleted.map(p => new org.apache.hadoop.fs.Path(p).getName).toSet ==
-      Set("_v-9-wdeadbeef", "_v-7", "_stage_v=3"))
-    assert(!loser.exists() && !crashed.exists() && !staging.exists())
+      Set("_v-9-wdeadbeef", "_v-7"))
+    assert(!loser.exists() && !crashed.exists())
     assert(young.exists() && v1dir.exists())
     // the table and its time-travel window are untouched
     assert(VersionedTable.read(spark, root).count() == 2)
     assert(VersionedTable.readVersion(spark, root, 1).count() == 1)
-    // a second vacuum finds nothing; a pre-manifest table vacuums nothing
+    // a second vacuum finds nothing; a never-committed table (no
+    // `_commits`) vacuums nothing
     assert(VersionedTable.vacuum(spark, root, 3600 * 1000L).isEmpty)
-    val legacy = tmpDir("vacuum-legacy")
-    new java.io.File(legacy, "v=1").mkdirs()
-    assert(VersionedTable.vacuum(spark, legacy, 0L).isEmpty)
+    val flat = tmpDir("vacuum-flat")
+    new java.io.File(flat, "_v-1").mkdirs()
+    assert(VersionedTable.vacuum(spark, flat, 0L).isEmpty)
   }
 
   test("sketch view: maintained CMS ≡ from-scratch, streaming folds exactly once") {
@@ -2892,22 +2891,6 @@ class LakehouseSpec extends SparkSpec {
     assert(VersionedTable.currentVersion(spark, root).contains(2L))
   }
 
-  test("versioned table: round-2 v=N layout reads and migrates to manifests") {
-    import spark.implicits._
-    val root = tmpDir("vtl") + "/t"
-    Seq((1L, "a"), (2L, "b")).toDF("k", "s").write.parquet(s"$root/v=1")
-    assert(VersionedTable.currentVersion(spark, root).contains(1L))
-    assert(VersionedTable.read(spark, root).count() == 2)
-    // the migration manifest lands BEFORE any new data is written, so
-    // a crash mid-first-commit can never resolve through the legacy
-    // scan into an unpublished data dir
-    val v2 = VersionedTable.rewrite(spark, root)(_.filter(col("k") === 1L))
-    assert(v2 == 2 && VersionedTable.read(spark, root).count() == 1)
-    assert(!new java.io.File(s"$root/v=1").exists())
-    assert(new java.io.File(s"$root/_commits/2").exists())
-    assert(new java.io.File(s"$root/_v-2").exists())
-  }
-
   test("versioned table: migrates a legacy flat dir on first commit") {
     import spark.implicits._
     val root = tmpDir("vtm") + "/t"
@@ -3348,53 +3331,6 @@ class LakehouseSpec extends SparkSpec {
         (src, stage) => VectorIndex.build(src, stage, k = 3, iters = 3))
     }
     assert(e.getMessage.contains("batch-99"))
-  }
-
-  test("legacy root-level corpus batch objects are adopted into data/ " +
-      "and stay visible to the versioned commit after an upgrade") {
-    import spark.implicits._
-    val root = tmpDir("corpuslegacy")
-    val cc = Automation.CorpusDedupConfig(
-      srcDir = s"$root/drops", rawTableDir = s"$root/raw",
-      registryDir = s"$root/reg", corpusDir = s"$root/corpus",
-      postingsDir = s"$root/postings")
-    val auto = new Automation(spark, Automation.Config(
-      srcDir = s"$root/arrivals", tableDir = s"$root/survey",
-      registryDir = s"$root/sreg", generate = false,
-      corpusDedup = Some(cc)))
-    new java.io.File(s"$root/drops").mkdirs()
-    new java.io.File(s"$root/arrivals").mkdirs()
-    // a batch object published by the PREVIOUS layout: directly under
-    // corpusDir, no data/ subdir — plus the done marker that claims
-    // its raw file was fully processed
-    new java.io.File(s"$root/corpus").mkdirs()
-    Seq((100L, (1 to 30).map(i => s"legacy$i").mkString(" "), "en", "s"))
-      .toDF("doc_id", "text", "lang", "source")
-      .coalesce(1).write.parquet(s"$root/corpus/_legacy_stage")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(s"$root/corpus"),
-      spark.sparkContext.hadoopConfiguration)
-    val part = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$root/corpus/_legacy_stage"))
-      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    assert(fs.rename(part,
-      new org.apache.hadoop.fs.Path(s"$root/corpus/batch-1.parquet")))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/corpus/_legacy_stage"),
-      true)
-    // a fresh drop arrives; the tick must adopt the legacy object AND
-    // process the new one — both visible through data/ afterwards
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$root/drops/d9.json"),
-      s"""{"doc_id": 200, "text": "${(1 to 30).map(i => s"fresh$i")
-        .mkString(" ")}", "lang": "en", "source": "s"}"""
-        .getBytes("UTF-8"))
-    auto.tick()
-    assert(!fs.exists(
-      new org.apache.hadoop.fs.Path(s"$root/corpus/batch-1.parquet")),
-      "legacy object not migrated")
-    val ids = spark.read.parquet(s"$root/corpus/data").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(ids == Set(100L, 200L), s"corpus after adoption: $ids")
   }
 
   test("Lease: tight-loop mutual exclusion, wrong-owner release refused, " +

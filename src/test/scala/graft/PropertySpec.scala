@@ -570,6 +570,66 @@ class PropertySpec extends SparkSpec {
     check(prop, cases = 12)
   }
 
+  test("property: dot_product_dec12 equals sum(cast(a*b as " +
+      "decimal(28,12))) on NaN, ±Inf, overflowing, null and empty inputs") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType}
+    import graft.functions.{DotProductDec12, GraftFunctions}
+    // every way the cast yields null: NaN, ±Inf, |a·b| ≥ 1e16 (1e8·1e8
+    // lands exactly on the bound), null elements; plus ordinary values
+    // with long decimal expansions and unequal lengths (min(len) rule)
+    val genElem: Gen[Option[Double]] = Gen.frequency(
+      (6, Gen.chooseNum(-1000000, 1000000).map(i => Some(i / 997.0))),
+      (1, Gen.const(None)),
+      (1, Gen.oneOf(Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity).map(Some(_))),
+      (2, Gen.oneOf(1e8, -1e8, 99999999.99, 1.5e8, 3e15, 1e16).map(Some(_))))
+    val genVec: Gen[List[Option[Double]]] =
+      Gen.chooseNum(0, 6).flatMap(Gen.listOfN(_, genElem))
+    val genCase = Gen.chooseNum(1, 25)
+      .flatMap(Gen.listOfN(_, Gen.zip(genVec, genVec)))
+    val fixed = List[(List[Option[Double]], List[Option[Double]])](
+      (Nil, Nil), (Nil, List(Some(1.0))),
+      (List(Some(Double.NaN)), List(Some(1.0))),
+      (List(Some(Double.PositiveInfinity), Some(2.0)),
+        List(Some(1.0), Some(0.5))),
+      (List(Some(1e8), Some(0.1)), List(Some(1e8), Some(0.3))),
+      (List(None, Some(1e16)), List(Some(1.0), Some(1.0))))
+    def arrLit(v: List[Option[Double]]) = Literal(new GenericArrayData(
+      v.map(_.map(Double.box).orNull).toArray[Any]), ArrayType(DoubleType))
+    val prop = Prop.forAll(genCase) { generated =>
+      val pairs = fixed ++ generated
+      // repartitioned so the kernel runs in generated code, not in the
+      // optimizer's interpreted local-relation folding
+      val df = pairs.zipWithIndex
+        .map { case ((a, b), i) => (i.toLong, a, b) }
+        .toDF("id", "a", "b").repartition(2)
+      val got = df.select(col("id"),
+          GraftFunctions.dotProductDec12(col("a"), col("b")))
+        .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+      val want = df.select(col("id"), col("b"),
+          posexplode(col("a")).as(Seq("i", "x")))
+        .groupBy("id")
+        .agg(sum((col("x") * get(col("b"), col("i")))
+          .try_cast(DecimalType(28, 12))).cast("double"))
+        .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+      val interpreted = pairs.indices.map { i =>
+        i.toLong -> Option(DotProductDec12(arrLit(pairs(i)._1), arrLit(pairs(i)._2))
+          .eval())
+      }.toMap
+      val bad = pairs.indices.map(_.toLong).filter { i =>
+        val w = want.getOrElse(i, None)
+        got(i) != w || interpreted(i) != w
+      }
+      Prop.propBoolean(bad.isEmpty) :| bad.map(i =>
+        s"${pairs(i.toInt)}: codegen ${got(i)} interpreted " +
+          s"${interpreted(i)} sql ${want.getOrElse(i, None)}").mkString("; ")
+    }
+    check(prop, cases = 30)
+  }
+
   test("property: banded range join equals the naive range join (incl. negatives)") {
     import spark.implicits._
     val genCase = for {

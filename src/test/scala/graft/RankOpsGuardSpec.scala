@@ -42,6 +42,18 @@ class RankOpsGuardSpec extends SparkSpec {
     assert(maxPs == 10000 / 25 - 1)
   }
 
+  test("withGroupedPrefixSum refuses a non-atomic group key instead " +
+      "of mis-grouping it") {
+    val df = spark.range(20).select(
+      org.apache.spark.sql.functions.array($"id" % 3).as("g"),
+      $"id".as("ord"), org.apache.spark.sql.functions.lit(1L).as("v"))
+    val e = intercept[IllegalArgumentException] {
+      RankOps.withGroupedPrefixSum(df, Seq("g"), Seq("ord"), "v", "ps")
+    }
+    assert(e.getMessage.contains("group key 'g' has type array<bigint>"),
+      e.getMessage)
+  }
+
   test("groupedPercentiles refuses inputs carrying its reserved " +
       "synthetic names instead of silently clobbering them") {
     val bad = spark.range(100)
