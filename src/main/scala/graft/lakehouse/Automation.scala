@@ -527,12 +527,8 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
         val seqDir = new org.apache.hadoop.fs.Path(s"$rx/_seq")
         rfs.mkdirs(seqDir)
         val tagFile = new org.apache.hadoop.fs.Path(seqDir, tag)
-        def readSeq(): Long = {
-          val in = rfs.open(tagFile)
-          try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim.toLong
-          finally in.close()
-        }
+        def readSeq(): Long =
+          graft.util.AtomicPut.readUtf8(rfs, tagFile).trim.toLong
         val id =
           if (rfs.exists(tagFile)) readSeq()
           else {

@@ -135,11 +135,7 @@ object Catalog {
       s"catalog version $version of $catRoot does not exist")
     var lastErr = "unreadable"
     (0 until 20).foreach { _ =>
-      val in = fs.open(p)
-      val body =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      parseCatalog(body) match {
+      parseCatalog(graft.util.AtomicPut.readUtf8(fs, p)) match {
         case Right(tables) => return Snapshot(version, tables)
         case Left(err) => lastErr = err; Thread.sleep(25)
       }

@@ -111,14 +111,9 @@ object Lease {
   private def readPair(fs: FileSystem, p: Path): Option[(String, Long)] =
     try {
       if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        s.split("\t") match {
-          case Array(o, t) => t.toLongOption.map(o -> _)
-          case _ => None
-        }
+      else graft.util.AtomicPut.readUtf8(fs, p).split("\t") match {
+        case Array(o, t) => t.toLongOption.map(o -> _)
+        case _ => None
       }
     } catch { case _: java.io.IOException => None }
 

@@ -50,6 +50,31 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * version 0 and the first commit supersedes them. Single writer (the
   * automation daemon); readers in other processes are safe at any
   * crash point.
+  *
+  * ==Manifest format==
+  *
+  * `_commits/N` is UTF-8 text, one record per line, fields separated
+  * by tabs. Text fields are escaped (`\` → `\\`, tab → `\t`,
+  * newline → `\n`); `\N` marks a NULL stat. The first line is the
+  * header `N` (informational). Then come sections in this fixed order,
+  * each sorted by line and left out when empty:
+  *
+  * {{{
+  * d  <data dir>                                 optimistic attempt dir (default _v-N)
+  * h  <logical StructType json> <dropped name>…  ALTERed logical schema + tombstones
+  * k  <name> <predicate SQL>                     CHECK constraint
+  * s  <file> <rows> <col> <min> <max> <nulls>    per-file, per-column stats
+  * b  <file> <col> <bits> <k> <base64 bitset>    per-file, per-column bloom
+  * dv <file> <dv parquet ref> <deleted rows>     positional deletion vector
+  * ed <ed parquet ref> <seq> <k1,k2,…> <count>   equality delete (count = key tuples)
+  * f  <file>                                     the version's data-file list
+  * }}}
+  *
+  * File keys are root-relative `<verdir>/<name>`, except the bare
+  * names whole-dir commits give their own stats and blooms. A version
+  * without `f` lines is its data dir. The manifest's existence is the
+  * commit: an empty body (a PUT torn mid-write) publishes version N
+  * with no payload. [[Manifest]] is the one codec for this format.
   */
 object VersionedTable {
 
@@ -73,56 +98,176 @@ object VersionedTable {
   def currentVersion(spark: SparkSession, root: String): Option[Long] = {
     val fs = fsOf(spark, root)
     val cd = commitsDir(root)
-    if (!fs.exists(cd)) None
-    else fs.listStatus(cd).toSeq
-      .flatMap(st => st.getPath.getName.toLongOption)
-      .maxOption
+    if (!fs.exists(cd)) None else listedVersions(fs, root).maxOption
   }
 
-  /** The data dir version `n`'s manifest points at: an explicit
-    * `d`-line (optimistic commits use attempt-unique dir names), else
-    * the conventional `_v-n`. */
-  private def dataDirOf(fs: FileSystem, root: String, n: Long): String = {
-    val p = new Path(commitsDir(root), n.toString)
-    val pointed =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        content.split("\n").find(_.startsWith("d\t")).map(_.drop(2))
-      }
-    s"$root/${pointed.getOrElse(s"_v-$n")}"
+  // ---- the manifest codec ------------------------------------------
+
+  /** One parsed `_commits/N` object: a field per line tag of the
+    * manifest format (see the object doc). `version` is the header (0
+    * for an empty body); sequences keep their section's line order. */
+  private[graft] final case class Manifest(
+      version: Long,
+      dataDir: Option[String] = None,
+      schema: Option[(StructType, Seq[String])] = None,
+      constraints: Seq[(String, String)] = Nil,
+      stats: Seq[FileStat] = Nil,
+      blooms: Map[(String, String), (Int, Int, java.util.BitSet)] = Map.empty,
+      dvs: Map[String, (String, Long)] = Map.empty,
+      eqDeletes: Seq[EqDelete] = Nil,
+      files: Seq[String] = Nil) {
+
+    /** The data dir name: the `d` pointer (optimistic commits stage in
+      * attempt-unique dirs), else the conventional `_v-N`. */
+    def dir: String = dataDir.getOrElse(s"_v-$version")
+
+    /** A stat/bloom key as a root-relative ref: bare names (whole-dir
+      * commits) live in [[dir]]. */
+    def rel(key: String): String = if (key.contains('/')) key else s"$dir/$key"
+
+    /** Every root-relative object ref that pins its parent dir: data
+      * files and the dv/ed sidecars. */
+    def refs: Seq[String] = files ++ dvs.values.map(_._1) ++ eqDeletes.map(_.ref)
+
+    def logical: Option[StructType] = schema.map(_._1)
   }
+
+  private[graft] object Manifest {
+
+    def parse(body: String): Manifest = {
+      val rows = body.split("\n").toSeq.map(_.split("\t", -1).toSeq)
+      def tagged(tag: String) = rows.collect { case `tag` +: fields => fields }
+      def opt(v: String) = if (v == NullMark) None else Some(unesc(v))
+      val statRows = tagged("s").collect { case Seq(f, n, c, mn, mx, nu) =>
+        (unesc(f), n.toLong, unesc(c), opt(mn), opt(mx), nu.toLong)
+      }
+      Manifest(
+        version = rows.headOption.flatMap(_.head.toLongOption).getOrElse(0L),
+        dataDir = tagged("d").collectFirst { case Seq(d) => unesc(d) },
+        schema = tagged("h").collectFirst { case json +: dropped =>
+          (DataType.fromJson(unesc(json)).asInstanceOf[StructType],
+            dropped.map(unesc))
+        },
+        constraints = tagged("k").collect { case Seq(n, p) => (unesc(n), unesc(p)) },
+        stats = statRows.groupBy(t => (t._1, t._2)).map { case ((f, n), ts) =>
+          FileStat(f, n, ts.map(t => t._3 -> t._4).toMap,
+            ts.map(t => t._3 -> t._5).toMap, ts.map(t => t._3 -> t._6).toMap)
+        }.toSeq.sortBy(_.file),
+        blooms = tagged("b").collect { case Seq(f, c, bits, k, b64) =>
+          (unesc(f), unesc(c)) -> (bits.toInt, k.toInt,
+            java.util.BitSet.valueOf(java.util.Base64.getDecoder.decode(b64)))
+        }.toMap,
+        dvs = tagged("dv").collect { case Seq(f, ref, n) =>
+          unesc(f) -> (unesc(ref), n.toLong)
+        }.toMap,
+        eqDeletes = tagged("ed").collect { case Seq(ref, seq, keys, n) =>
+          EqDelete(unesc(ref), seq.toLong, keys.split(",").toSeq.map(unesc),
+            n.toLong)
+        },
+        files = tagged("f").collect { case Seq(f) => unesc(f) })
+    }
+
+    def render(m: Manifest): String = {
+      def line(fields: String*) = fields.mkString("\t")
+      def opt(v: Option[String]) = v.map(esc).getOrElse(NullMark)
+      val sections = Seq(
+        m.dataDir.toSeq.map(d => line("d", esc(d))),
+        m.schema.toSeq.map { case (s, dropped) =>
+          line("h" +: esc(s.json) +: dropped.map(esc): _*)
+        },
+        m.constraints.map { case (n, p) => line("k", esc(n), esc(p)) },
+        m.stats.flatMap(s => s.min.keys.map(c => line("s", esc(s.file),
+          s.rows.toString, esc(c), opt(s.min(c)), opt(s.max(c)),
+          s.nulls(c).toString))),
+        m.blooms.toSeq.map { case ((f, c), (bits, k, bs)) =>
+          line("b", esc(f), esc(c), bits.toString, k.toString,
+            java.util.Base64.getEncoder.encodeToString(bs.toByteArray))
+        },
+        m.dvs.toSeq.map { case (f, (ref, n)) =>
+          line("dv", esc(f), esc(ref), n.toString)
+        },
+        m.eqDeletes.map(e => line("ed", esc(e.ref), e.seq.toString,
+          e.keyCols.map(esc).mkString(","), e.count.toString)),
+        m.files.map(f => line("f", esc(f))))
+      (m.version.toString +: sections.flatMap(_.sorted)).mkString("\n")
+    }
+  }
+
+  private def esc(s: String): String = s
+    .replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")
+  private def unesc(s: String): String = {
+    val sb = new StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '\\' && i + 1 < s.length) {
+        s.charAt(i + 1) match {
+          case '\\' => sb.append('\\'); i += 2
+          case 't'  => sb.append('\t'); i += 2
+          case 'n'  => sb.append('\n'); i += 2
+          case o    => sb.append(o); i += 2
+        }
+      } else { sb.append(c); i += 1 }
+    }
+    sb.toString
+  }
+  private val NullMark = "\\N"
+
+  /** Version `n`'s manifest, fetched in ONE object read; None when no
+    * `_commits/n` exists. The object's name is the version. */
+  private def manifest(fs: FileSystem, root: String, n: Long): Option[Manifest] = {
+    val p = new Path(commitsDir(root), n.toString)
+    if (!fs.exists(p)) None
+    else Some(Manifest.parse(graft.util.AtomicPut.readUtf8(fs, p)).copy(version = n))
+  }
+
+  /** [[manifest]], or an empty one (whole-dir `_v-n`) when absent. */
+  private def manifestOf(fs: FileSystem, root: String, n: Long): Manifest =
+    manifest(fs, root, n).getOrElse(Manifest(n))
+
+  private def manifestOf(spark: SparkSession, root: String, n: Long): Manifest =
+    manifestOf(fsOf(spark, root), root, n)
+
+  /** Version `n`'s manifest for a READ: one that is missing under an
+    * existing `_commits` dir was PRUNED, and must fail loudly — never
+    * fall back to its version-dir listing. On a delta table that
+    * listing is a PARTIAL snapshot (carried files live in older dirs),
+    * and a silent partial read would corrupt every consumer diffing
+    * versions (CDC `changes`, the streaming source, mirrors). Widen
+    * `keepVersions` to cover the longest reader/consumer lag instead. */
+  private def readable(spark: SparkSession, root: String, n: Long): Manifest = {
+    val fs = fsOf(spark, root)
+    manifest(fs, root, n).getOrElse {
+      if (fs.exists(commitsDir(root)))
+        throw new IllegalStateException(
+          s"version $n of $root is not retained (its manifest " +
+            "was pruned) — widen keepVersions to cover this reader")
+      Manifest(n)
+    }
+  }
+
+  /** The current version's manifest, for a read. */
+  private def currentManifest(spark: SparkSession, root: String): Manifest =
+    readable(spark, root, currentVersion(spark, root).getOrElse(
+      throw new IllegalStateException(s"$root has no committed version")))
 
   /** Directory `read` resolves: the current version's data dir, or
     * `root` itself for a pre-versioning flat table. */
   def currentPath(spark: SparkSession, root: String): String =
     currentVersion(spark, root) match {
-      case Some(n) => dataDirOf(fsOf(spark, root), root, n)
+      case Some(n) => s"$root/${manifestOf(spark, root, n).dir}"
       case None => root
     }
 
   /** The explicit data-file list a version's manifest carries
-    * (ROOT-relative `f\t` lines — written by [[commitDelta]]), or None
+    * (ROOT-relative `f` lines — written by [[commitDelta]]), or None
     * for a conventional whole-dir version. When present, the list IS
     * the version's data: files may live in several retained version
     * dirs, which is what lets a commit carry untouched files forward
     * by reference instead of copying table-sized bytes. */
   def filesOf(spark: SparkSession, root: String,
-      version: Long): Option[Seq[String]] = {
-    val fs = fsOf(spark, root)
-    val p = new Path(commitsDir(root), version.toString)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val fl = content.split("\n").toSeq.filter(_.startsWith("f\t"))
-      .map(l => unesc(l.drop(2)))
-    if (fl.isEmpty) None else Some(fl)
-  }
+      version: Long): Option[Seq[String]] =
+    Some(manifestOf(spark, root, version).files).filter(_.nonEmpty)
 
   /** The current version's data files as ROOT-relative paths — the
     * carried-file input of a [[commitDelta]]. Manifest f-lines when
@@ -137,14 +282,14 @@ object VersionedTable {
     * set a [[rollback]] re-references. */
   def filesAt(spark: SparkSession, root: String,
       version: Long): Seq[String] =
-    filesOf(spark, root, version).getOrElse {
-      val fs = fsOf(spark, root)
-      val dir = new Path(dataDirOf(fs, root, version))
-      val dirName = dir.getName
-      fs.listStatus(dir).toSeq
-        .filter(st => st.isFile && isDataFile(st.getPath.getName))
-        .map(st => s"$dirName/${st.getPath.getName}")
-    }
+    filesIn(fsOf(spark, root), root, manifestOf(spark, root, version))
+
+  /** A manifest's data files: its `f` list, else its dir's listing. */
+  private def filesIn(fs: FileSystem, root: String, m: Manifest): Seq[String] =
+    if (m.files.nonEmpty) m.files
+    else fs.listStatus(new Path(s"$root/${m.dir}")).toSeq
+      .filter(st => st.isFile && isDataFile(st.getPath.getName))
+      .map(st => s"${m.dir}/${st.getPath.getName}")
 
   /** Delete sidecar objects (positional `dv-`, equality `ed-`): a
     * VISIBLE leaf name (Spark's file index silently drops `_`/`.`-
@@ -157,12 +302,6 @@ object VersionedTable {
   private def isDataFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".") && !isDvFile(name)
 
-  /** Resolve a manifest file key to an absolute path: delta-commit
-    * keys are root-relative (they contain a `/`); legacy keys are
-    * bare names inside the version dir. */
-  private def resolveFile(root: String, dir: String, key: String): String =
-    if (key.contains('/')) s"$root/$key" else s"$dir/$key"
-
   def read(spark: SparkSession, root: String): DataFrame =
     currentVersion(spark, root) match {
       case Some(n) => readVersion(spark, root, n)
@@ -174,14 +313,15 @@ object VersionedTable {
     * (delta) versions, where an in-place append would be INVISIBLE to
     * readers resolving the manifest's file list — those tables append
     * through [[appendDelta]] instead. */
-  def appendablePath(spark: SparkSession, root: String): String = {
-    currentVersion(spark, root).foreach { v =>
-      require(filesOf(spark, root, v).isEmpty,
-        s"version $v of $root is a file-list (delta) commit: in-place " +
-          "appends are invisible to its readers — use appendDelta")
+  def appendablePath(spark: SparkSession, root: String): String =
+    currentVersion(spark, root).map(manifestOf(spark, root, _)) match {
+      case Some(m) =>
+        require(m.files.isEmpty,
+          s"version ${m.version} of $root is a file-list (delta) commit: " +
+            "in-place appends are invisible to its readers — use appendDelta")
+        s"$root/${m.dir}"
+      case None => root
     }
-    currentPath(spark, root)
-  }
 
   /** Crash-safe commit of the next version. `writer` receives the
     * version's (hidden, final) data dir and must produce a complete
@@ -205,7 +345,7 @@ object VersionedTable {
     * removes; pair with `Bucketing.writeRangePartitioned`/
     * `writeZOrdered` inside `writer` so file ranges are actually
     * tight. The manifest's EXISTENCE is still the commit; stats are
-    * payload (legacy empty manifests stay valid).
+    * payload (an empty manifest is still a valid commit).
     *
     * SINGLE-WRITER path: two RACING plain commits are detected at the
     * manifest PUT (the loser throws), but both stage into the SAME
@@ -240,28 +380,7 @@ object VersionedTable {
     * (name, predicate SQL). Empty for unconstrained tables. */
   def constraintsOf(spark: SparkSession, root: String): Seq[(String, String)] =
     currentVersion(spark, root)
-      .map(v => manifestConstraints(spark, root, v)).getOrElse(Nil)
-
-  /** `k\t<name>\t<predicate>` manifest lines of version `n`. */
-  private def manifestConstraints(spark: SparkSession, root: String,
-      n: Long): Seq[(String, String)] = {
-    val fs = fsOf(spark, root)
-    val p = new Path(commitsDir(root), n.toString)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    content.split("\n").toSeq.collect {
-      case l if l.startsWith("k\t") =>
-        val parts = l.split("\t", -1)
-        (unesc(parts(1)), unesc(parts(2)))
-    }
-  }
-
-  private def constraintLines(cs: Seq[(String, String)]): String =
-    cs.map { case (n, p) => s"k\t${esc(n)}\t${esc(p)}" }
-      .sorted.mkString("\n")
+      .map(v => manifestOf(spark, root, v).constraints).getOrElse(Nil)
 
   /** Evaluate every constraint in ONE aggregate pass over `df` (the
     * DataQuality shape — map-side partials, never one job per rule):
@@ -429,21 +548,15 @@ object VersionedTable {
     // declared CHECK constraints persist across FULL rewrites (unlike
     // the logical-schema h-line, they are declarative intent, never
     // derivable from the data) and gate every row this commit writes
-    val cs = base.map(v => manifestConstraints(spark, root, v))
-      .getOrElse(Nil)
+    val cs = base.map(v => manifestOf(fs, root, v).constraints).getOrElse(Nil)
     if (cs.nonEmpty)
       enforceConstraints(fs, data, spark.read.parquet(data.toString), cs)
-    val stats =
-      if (statsCols.isEmpty) ""
-      else collectFileStats(spark, data.toString, statsCols)
-    val blooms =
-      if (bloomCols.isEmpty) ""
-      else collectFileBlooms(spark, data.toString, bloomCols,
-        bloomBits, bloomHashes)
-    val payload = Seq(constraintLines(cs), stats, blooms)
-      .filter(_.nonEmpty).mkString("\n")
     // THE commit point: one object's existence flips visibility
-    publishManifest(fs, root, next, payload)
+    publishManifest(fs, root, Manifest(next, constraints = cs,
+      stats = collectFileStats(spark, Seq(data.toString), statsCols,
+        relKeys = false),
+      blooms = collectFileBlooms(spark, Seq(data.toString), bloomCols,
+        bloomBits, bloomHashes, relKeys = false)))
     // prune data dirs and manifests older than the retention window,
     // and pre-versioning flat files (unreachable once versioned)
     prune(fs, root, next - math.max(1, keepVersions))
@@ -512,7 +625,7 @@ object VersionedTable {
     fs.delete(stage, true)
     writer(stage.toString)
     // ensure the version dir exists even for a write-nothing delta —
-    // batch markers and dataDirOf resolution expect it
+    // batch markers and data-dir resolution expect it
     fs.mkdirs(stage)
     val newNames = fs.listStatus(stage).toSeq
       .filter(st => st.isFile && isDataFile(st.getPath.getName))
@@ -547,13 +660,13 @@ object VersionedTable {
       constraintsOverride: Option[Seq[(String, String)]],
       keepVersions: Int): Long = {
 
+    // the manifest every carried section comes from, fetched once
+    val prev = statsFrom.orElse(base).map(v => manifestOf(fs, root, v))
     // CHECK constraints: carried forward (or replaced by add/drop);
     // enforced on the NEW files only — carried files passed when they
     // were committed, so the whole table holds by induction and a
     // delta append stays O(batch) even on a constrained 100 TB table
-    val cs = constraintsOverride.getOrElse(
-      statsFrom.orElse(base)
-        .map(v => manifestConstraints(spark, root, v)).getOrElse(Nil))
+    val cs = constraintsOverride.getOrElse(prev.toSeq.flatMap(_.constraints))
     if (cs.nonEmpty && newNames.nonEmpty) {
       val newDf = spark.read.parquet(newNames.map(n => s"$stage/$n"): _*)
       // a schema-evolution append can land files that LACK a
@@ -562,15 +675,7 @@ object VersionedTable {
       // documented NULL-passes rule instead of dying mid-commit as an
       // unresolved column; a predicate over a column the TABLE does
       // not know either still refuses, with a clear message
-      val aligned = statsFrom.orElse(base) match {
-        case None => newDf
-        case Some(v) =>
-          val (ls, _) = logicalSchemaOf(spark, root, v)
-          val have = newDf.columns.map(_.toLowerCase).toSet
-          ls.fields.filterNot(f => have(f.name.toLowerCase))
-            .foldLeft(newDf)((d, f) =>
-              d.withColumn(f.name, lit(null).cast(f.dataType)))
-      }
+      val aligned = prev.fold(newDf)(m => withLogicalNulls(spark, root, m, newDf))
       try enforceConstraints(fs, stage, aligned, cs)
       catch {
         case e: org.apache.spark.sql.AnalysisException =>
@@ -583,99 +688,51 @@ object VersionedTable {
       }
     }
 
-    // previous manifest payload, keyed root-relative, for carry-over
-    val (prevStats, prevBlooms) = statsFrom.orElse(base) match {
-      case None => (Map.empty[String, FileStat],
-        Map.empty[(String, String), (Int, Int, java.util.BitSet)])
-      case Some(v) =>
-        val dirName = new Path(dataDirOf(fs, root, v)).getName
-        def rel(f: String) = if (f.contains('/')) f else s"$dirName/$f"
-        (manifestStats(spark, root, v).map(s => rel(s.file) -> s).toMap,
-          manifestBlooms(spark, root, v).map { case ((f, c), b) =>
-            (rel(f), c) -> b
-          }.toMap)
-    }
-    // carried files' stats/blooms are COPIED forward even when no
-    // columns are requested — carrying the skipping index is free;
-    // only the files this commit touches need (re)scanning, and
-    // stat-less files read conservatively anyway
-    val statsPayload = {
-      val copied = carried.filter(prevStats.contains)
-        .flatMap(r => statLines(r, prevStats(r)))
-      val fresh =
-        if (statsCols.isEmpty) ""
-        else {
-          val rescan = carried.filterNot(prevStats.contains)
-            .map(r => s"$root/$r")
-          // explicit new-file paths, not the stage dir: the stage may
-          // also hold a visible dv sidecar with a different schema
-          val scanned = rescan ++ newNames.map(n => s"$stage/$n")
-          if (scanned.isEmpty) ""
-          else collectFileStats(spark, scanned, statsCols, relKeys = true)
-        }
-      (copied ++ Option(fresh).filter(_.nonEmpty)).sorted.mkString("\n")
-    }
-    val bloomPayload = {
-      val copied = carried.flatMap { r =>
-        prevBlooms.collect { case ((f, c), (bits, k, bs)) if f == r =>
-          bloomLine(r, c, bits, k, bs)
-        }
-      }
-      val fresh =
-        if (bloomCols.isEmpty) ""
-        else {
-          val rescan = carried
-            .filter(r => bloomCols.exists(c => !prevBlooms.contains((r, c))))
-            .map(r => s"$root/$r")
-          val scanned = rescan ++ newNames.map(n => s"$stage/$n")
-          if (scanned.isEmpty) ""
-          else collectFileBlooms(spark, scanned, bloomCols, bloomBits,
-            bloomHashes, relKeys = true)
-        }
-      (copied ++ Option(fresh).filter(_.nonEmpty)).sorted.mkString("\n")
-    }
-    // deletion-vector lines: carried files keep their vector (a
-    // commit that re-references a file must re-reference its hidden
-    // deletes — dropping the line would RESURRECT deleted rows);
-    // rewritten files' vectors drop (the rewrite read was DV-applied,
-    // so the new bytes are purged); explicit `dv` entries override.
-    val prevDv = statsFrom.orElse(base)
-      .map(v => deleteVectors(spark, root, v))
-      .getOrElse(Map.empty[String, (String, Long)])
-    val overridden = dv.map(_._1).toSet
-    val dvLines = (carried.filterNot(overridden)
-        .flatMap(f => prevDv.get(f).map { case (ref, c) => (f, ref, c) })
-      ++ dv)
-      .map { case (f, ref, c) => s"dv\t${esc(f)}\t${esc(ref)}\t$c" }
-      .sorted.mkString("\n")
-    // equality-delete lines: carried by default (a commit that keeps a
-    // file in an ED's scope must keep the ED — dropping it would
-    // resurrect deleted keys), but scope-FILTERED: a line whose seq
-    // covers no file in the new manifest is garbage (every file it
-    // applied to was rewritten through an ED-applied read) and drops
+    // carried files' stats/blooms are COPIED forward under their
+    // root-relative keys even when no columns are requested — carrying
+    // the skipping index is free; only the files this commit touches
+    // need (re)scanning, and stat-less files read conservatively anyway
+    val isCarried = carried.toSet
+    val prevStats = prev.toSeq.flatMap(m =>
+      m.stats.map(s => s.copy(file = m.rel(s.file)))).filter(s => isCarried(s.file))
+    val prevBlooms = prev.toSeq.flatMap(m => m.blooms.map { case ((f, c), b) =>
+      (m.rel(f), c) -> b
+    }).filter { case ((f, _), _) => isCarried(f) }.toMap
+    // explicit new-file paths, not the stage dir: the stage may also
+    // hold a visible dv sidecar with a different schema
+    val newFiles = newNames.map(n => s"$stage/$n")
+    val statted = prevStats.map(_.file).toSet
+    val stats = prevStats ++ collectFileStats(spark,
+      carried.filterNot(statted).map(r => s"$root/$r") ++ newFiles,
+      statsCols, relKeys = true)
+    val blooms = prevBlooms ++ collectFileBlooms(spark,
+      carried.filter(r => bloomCols.exists(c => !prevBlooms.contains((r, c))))
+        .map(r => s"$root/$r") ++ newFiles,
+      bloomCols, bloomBits, bloomHashes, relKeys = true)
+    // deletion vectors: carried files keep their vector (a commit that
+    // re-references a file must re-reference its hidden deletes —
+    // dropping it would RESURRECT deleted rows); rewritten files'
+    // vectors drop (the rewrite read was DV-applied, so the new bytes
+    // are purged); explicit `dv` entries override.
+    val dvs = prev.toSeq.flatMap(_.dvs).filter { case (f, _) => isCarried(f) }
+      .toMap ++ dv.map { case (f, ref, c) => f -> (ref, c) }
+    // equality deletes: carried by default (a commit that keeps a file
+    // in an ED's scope must keep the ED — dropping it would resurrect
+    // deleted keys), but scope-FILTERED: an ED whose seq covers no
+    // file in the new manifest is garbage (every file it applied to
+    // was rewritten through an ED-applied read) and drops
     // automatically, so full rewrites and complete compactions
     // self-clean. `edOverride` replaces the carry set outright
-    // (deleteByKey adds a line; resolveEqualityDeletes drops them all).
-    val prevEds = statsFrom.orElse(base)
-      .map(v => equalityDeletes(spark, root, v)).getOrElse(Nil)
-    val edLines = edOverride.getOrElse(prevEds)
-      .filter(e => all.exists(f => refSeq(f) <= e.seq))
-      .map(e => s"ed\t${esc(e.ref)}\t${e.seq}\t" +
-        s"${e.keyCols.mkString(",")}\t${e.count}")
-      .sorted.mkString("\n")
-    val fLines = all.map(r => s"f\t${esc(r)}").sorted.mkString("\n")
-    // logical-schema line: an explicit override (ALTER) wins; else a
-    // delta commit CARRIES the previous declaration — its files are
-    // carried too, so the mapping they need must survive with them
-    val hLine = schemaOverride
-      .orElse(statsFrom.orElse(base)
-        .flatMap(v => manifestSchemaLine(spark, root, v)))
-      .map { case (s, dropped) => schemaLine(s, dropped) }
-      .getOrElse("")
-    val payload = Seq(hLine, constraintLines(cs), statsPayload,
-      bloomPayload, dvLines, edLines,
-      fLines).filter(_.nonEmpty).mkString("\n")
-    publishManifest(fs, root, next, payload, dataDirName)
+    // (deleteByKey adds one; resolveEqualityDeletes drops them all).
+    val oldest = all.map(refSeq).min
+    val eds = edOverride.getOrElse(prev.toSeq.flatMap(_.eqDeletes))
+      .filter(_.seq >= oldest)
+    // logical schema: an explicit override (ALTER) wins; else a delta
+    // commit CARRIES the previous declaration — its files are carried
+    // too, so the mapping they need must survive with them
+    val schema = schemaOverride.orElse(prev.flatMap(_.schema))
+    publishManifest(fs, root, Manifest(next, dataDirName, schema, cs, stats,
+      blooms, dvs, eds, all))
     prune(fs, root, next - math.max(1, keepVersions))
     next
   }
@@ -726,11 +783,12 @@ object VersionedTable {
     var attempt = 0
     while (true) {
       val base = currentVersion(spark, root)
-      base.foreach { v =>
-        require(equalityDeletes(spark, root, v).isEmpty,
-          s"appendDeltaOptimistic refuses on $root: version $v carries " +
-            "equality deletes, whose version-seq scoping cannot order a " +
-            "concurrently staged append — resolveEqualityDeletes first")
+      val baseM = base.map(manifestOf(fs, root, _))
+      baseM.foreach { m =>
+        require(m.eqDeletes.isEmpty,
+          s"appendDeltaOptimistic refuses on $root: version ${m.version} " +
+            "carries equality deletes, whose version-seq scoping cannot " +
+            "order a concurrently staged append — resolveEqualityDeletes first")
       }
       val next = base.getOrElse(0L) + 1L
       val (stage, newNames) = staged.getOrElse {
@@ -749,7 +807,7 @@ object VersionedTable {
         staged = Some(t)
         t
       }
-      val carried = base.map(_ => currentFiles(spark, root)).getOrElse(Nil)
+      val carried = baseM.map(filesIn(fs, root, _)).getOrElse(Nil)
       if (dedupeNewByName && newNames.nonEmpty &&
           newNames.forall(n => carried.exists(_.endsWith(s"/$n")))) {
         // a racing appender already landed this exact batch (same
@@ -774,22 +832,19 @@ object VersionedTable {
     throw new IllegalStateException("unreachable")
   }
 
-  /** The f-line refs of a manifest, fs-level (no SparkSession). */
-  private def manifestFileRefs(fs: FileSystem, root: String,
-      n: Long): Seq[String] = {
-    val p = new Path(commitsDir(root), n.toString)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    content.split("\n").toSeq.collect {
-      case l if l.startsWith("f\t") => unesc(l.drop(2))
-      // dv/ed refs pin their parent dir exactly like a data-file ref
-      case l if l.startsWith("dv\t") => unesc(l.split("\t")(2))
-      case l if l.startsWith("ed\t") => unesc(l.split("\t")(1))
-    }
-  }
+  /** The top-level dirs the manifests of `versions` keep alive: each
+    * version's data dir plus every dir its file, dv and ed refs point
+    * into — the liveness rule [[prune]], [[dropBranch]] and [[vacuum]]
+    * share. */
+  private def liveDirs(fs: FileSystem, root: String,
+      versions: Seq[Long]): Set[String] =
+    versions.flatMap { n =>
+      val m = manifestOf(fs, root, n)
+      m.dir +: m.refs.map(_.takeWhile(_ != '/'))
+    }.toSet
+
+  private def listedVersions(fs: FileSystem, root: String): Seq[Long] =
+    fs.listStatus(commitsDir(root)).toSeq.flatMap(_.getPath.getName.toLongOption)
 
   /** Remove versions (data + manifest) at or below `cutoff`, stale
     * staging dirs, losing/crashed optimistic attempt dirs whose target
@@ -801,13 +856,8 @@ object VersionedTable {
     * their files) survives any cutoff until the tag is dropped. */
   private def prune(fs: FileSystem, root: String, cutoff: Long): Unit = {
     val pinned = taggedVersions(fs, root).values.toSet
-    val retained = fs.listStatus(commitsDir(root)).toSeq
-      .flatMap(_.getPath.getName.toLongOption)
-      .filter(n => n > cutoff || pinned(n))
-    val referenced: Set[String] = retained.flatMap { n =>
-      new Path(dataDirOf(fs, root, n)).getName +:
-        manifestFileRefs(fs, root, n).map(_.takeWhile(_ != '/'))
-    }.toSet
+    val referenced = liveDirs(fs, root,
+      listedVersions(fs, root).filter(n => n > cutoff || pinned(n)))
     fs.listStatus(new Path(root)).foreach { st =>
       val name = st.getPath.getName
       name match {
@@ -835,49 +885,27 @@ object VersionedTable {
     * deletes (see [[deleteByKey]]) are filtered out; a version with
     * neither takes the plain-scan fast path. */
   def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
-    if (deleteVectors(spark, root, version).isEmpty &&
-        equalityDeletes(spark, root, version).isEmpty) {
-      val base = rawReadVersion(spark, root, version)
-      manifestSchema(spark, root, version) match {
-        case Some(s) => projectLogical(base, s)
-        case None => base
-      }
+    readAt(spark, root, readable(spark, root, version))
+
+  private def readAt(spark: SparkSession, root: String, m: Manifest): DataFrame =
+    if (m.dvs.isEmpty && m.eqDeletes.isEmpty) {
+      val base = rawRead(spark, root, m)
+      m.logical.fold(base)(projectLogical(base, _))
     } else // scanWithRefs projects to the logical schema itself
-      scanWithRefs(spark, root, version).drop(DvFileCol, DvPosCol)
+      scanWithRefs(spark, root, m).drop(DvFileCol, DvPosCol)
 
   /** The physical scan of a version — deleted-but-not-purged rows
-    * INCLUDED. The input of every DV-aware consumer.
-    *
-    * A version with NO manifest under an existing `_commits` dir was
-    * PRUNED: it must fail loudly, never fall back to its version-dir
-    * listing — on a delta table that listing is a PARTIAL snapshot
-    * (carried files live in older dirs), and a silent partial read
-    * would corrupt every consumer diffing versions (CDC `changes`,
-    * the streaming source, mirrors). Widen `keepVersions` to cover
-    * the longest reader/consumer lag instead. */
-  private def rawReadVersion(spark: SparkSession, root: String,
-      version: Long): DataFrame = {
-    // an evolved table's file set is schema-MIXED (files predating an
-    // ADD/RENAME lack the new physical column), so the scan must read
-    // under the explicit physical union schema — footer-inferred
-    // schemas would make the scan depend on WHICH file Spark sampled
-    val rd = manifestSchema(spark, root, version) match {
-      case Some(s) => spark.read.schema(physicalReadSchema(s))
-      case None => spark.read
-    }
-    filesOf(spark, root, version) match {
-      case Some(files) =>
-        rd.parquet(files.map(f => s"$root/$f"): _*)
-      case None =>
-        val fs = fsOf(spark, root)
-        if (fs.exists(commitsDir(root)) &&
-            !fs.exists(new Path(commitsDir(root), version.toString)))
-          throw new IllegalStateException(
-            s"version $version of $root is not retained (its manifest " +
-              "was pruned) — widen keepVersions to cover this reader")
-        rd.parquet(dataDirOf(fs, root, version))
-    }
-  }
+    * INCLUDED. The input of every DV-aware consumer. */
+  private def rawRead(spark: SparkSession, root: String, m: Manifest): DataFrame =
+    if (m.files.nonEmpty) reader(spark, m).parquet(m.files.map(f => s"$root/$f"): _*)
+    else reader(spark, m).parquet(s"$root/${m.dir}")
+
+  /** An evolved table's file set is schema-MIXED (files predating an
+    * ADD/RENAME lack the new physical column), so its scans read under
+    * the explicit physical union schema — footer-inferred schemas
+    * would make the scan depend on WHICH file Spark sampled. */
+  private def reader(spark: SparkSession, m: Manifest) =
+    m.logical.fold(spark.read)(s => spark.read.schema(physicalReadSchema(s)))
 
   // ---- merge-on-read deletion vectors ------------------------------
   //
@@ -893,7 +921,6 @@ object VersionedTable {
   // visible subset). Compaction / CoW rewrites purge vectors for the
   // files they rewrite; commits that carry a file forward carry its
   // vector line with it, so appends never resurrect deleted rows.
-  // Manifest line: `dv \t <fileref> \t <dvref> \t <deletedCount>`.
 
   private[graft] val DvFileCol = "_graft_dv_file"
   private[graft] val DvPosCol = "_graft_dv_pos"
@@ -902,19 +929,8 @@ object VersionedTable {
   /** The deletion vectors a version's manifest carries:
     * root-relative data-file ref -> (dv-parquet ref, deleted rows). */
   def deleteVectors(spark: SparkSession, root: String,
-      version: Long): Map[String, (String, Long)] = {
-    val fs = fsOf(spark, root)
-    val p = new Path(commitsDir(root), version.toString)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    content.split("\n").toSeq.filter(_.startsWith("dv\t")).map { l =>
-      val parts = l.split("\t")
-      unesc(parts(1)) -> (unesc(parts(2)), parts(3).toLong)
-    }.toMap
-  }
+      version: Long): Map[String, (String, Long)] =
+    manifestOf(spark, root, version).dvs
 
   /** The (file, pos) rows of a version's vectors, or None when it has
     * none. Rows for files absent from a given scan simply never match
@@ -949,32 +965,19 @@ object VersionedTable {
   // positional vector in one scan (restoring metadata-exact counts);
   // rewrites read ED-applied, so a fully-rewritten table self-cleans
   // through commitDelta's scope filter.
-  // Manifest line: `ed \t <edref> \t <seq> \t <k1,k2,...> \t <count>`
-  // (`count` = distinct key tuples published, NOT rows deleted — the
-  // commit never scans the data, so the row count is unknowable).
 
   /** One equality-delete manifest line: `ref` is the root-relative
     * key-tuple parquet, `seq` the version whose files it applies to
-    * (refs in dirs <= seq), `count` the number of key tuples. */
+    * (refs in dirs <= seq), `count` the number of distinct key tuples
+    * published, NOT rows deleted — the commit never scans the data,
+    * so the row count is unknowable. */
   final case class EqDelete(ref: String, seq: Long,
       keyCols: Seq[String], count: Long)
 
   /** The equality deletes a version's manifest carries. */
   def equalityDeletes(spark: SparkSession, root: String,
-      version: Long): Seq[EqDelete] = {
-    val fs = fsOf(spark, root)
-    val p = new Path(commitsDir(root), version.toString)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    content.split("\n").toSeq.filter(_.startsWith("ed\t")).map { l =>
-      val parts = l.split("\t")
-      EqDelete(unesc(parts(1)), parts(2).toLong,
-        parts(3).split(",").toSeq, parts(4).toLong)
-    }
-  }
+      version: Long): Seq[EqDelete] =
+    manifestOf(spark, root, version).eqDeletes
 
   /** The version-dir sequence a root-relative file ref was written
     * at; refs outside a `_v-N` dir read as 0 (oldest — always in
@@ -1034,23 +1037,18 @@ object VersionedTable {
     * file-granular CoW DML plan from. Filters/joins preserve the
     * hidden columns; a caller's projection must not drop them. */
   private[graft] def scanWithRefs(spark: SparkSession, root: String,
-      version: Long): DataFrame = {
-    val keyed = rawReadVersion(spark, root, version)
-      .withColumn(DvFileCol,
-        regexp_extract(col("_metadata.file_path"), FileRefRe, 1))
-      .withColumn(DvPosCol, col("_metadata.row_index"))
-    val dvd = dvRowsDf(spark, root, deleteVectors(spark, root, version))
-      .fold(keyed)(antiDv(keyed, _))
-    val scanned = antiEd(dvd, spark, root,
-      equalityDeletes(spark, root, version))
+      version: Long): DataFrame =
+    scanWithRefs(spark, root, readable(spark, root, version))
+
+  private def scanWithRefs(spark: SparkSession, root: String,
+      m: Manifest): DataFrame = {
+    val scanned = antiEd(dvApplied(spark, root, m,
+      withRefs(rawRead(spark, root, m))), spark, root, m.eqDeletes)
     // evolved tables: consumers filter/pick on LOGICAL names (a MoR
     // DELETE's predicate must see a renamed column's pre-rename
     // values), so project here — keeping the hidden DV key columns
-    manifestSchema(spark, root, version) match {
-      case Some(s) =>
-        projectLogical(scanned, s, extra = Seq(DvFileCol, DvPosCol))
-      case None => scanned
-    }
+    m.logical.fold(scanned)(
+      projectLogical(scanned, _, extra = Seq(DvFileCol, DvPosCol)))
   }
 
   private[graft] def scanWithRefs(spark: SparkSession,
@@ -1058,34 +1056,32 @@ object VersionedTable {
     scanWithRefs(spark, root, currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"$root has no committed version")))
 
+  /** `scan` keyed by [[DvFileCol]] / [[DvPosCol]]. */
+  private def withRefs(scan: DataFrame): DataFrame = scan
+    .withColumn(DvFileCol, regexp_extract(col("_metadata.file_path"), FileRefRe, 1))
+    .withColumn(DvPosCol, col("_metadata.row_index"))
+
+  /** A keyed scan minus the rows `m`'s deletion vectors hide. */
+  private def dvApplied(spark: SparkSession, root: String, m: Manifest,
+      keyed: DataFrame): DataFrame =
+    dvRowsDf(spark, root, m.dvs).fold(keyed)(antiDv(keyed, _))
+
   /** Read a subset of a version's files with its deletion vectors
     * AND equality deletes applied — the partial-scan form every
     * pruned/boundary read uses (plain scan when the version carries
     * neither). */
   private[graft] def readFilesWithDv(spark: SparkSession, root: String,
-      version: Long, absFiles: Seq[String]): DataFrame = {
-    val dv = deleteVectors(spark, root, version)
-    val eds = equalityDeletes(spark, root, version)
-    val sch = manifestSchema(spark, root, version)
-    val raw = sch match {
-      case Some(s) => spark.read.schema(physicalReadSchema(s))
-        .parquet(absFiles: _*)
-      case None => spark.read.parquet(absFiles: _*)
-    }
+      version: Long, absFiles: Seq[String]): DataFrame =
+    readFilesWithDv(spark, root, manifestOf(spark, root, version), absFiles)
+
+  private def readFilesWithDv(spark: SparkSession, root: String,
+      m: Manifest, absFiles: Seq[String]): DataFrame = {
+    val raw = reader(spark, m).parquet(absFiles: _*)
     val visible =
-      if (dv.isEmpty && eds.isEmpty) raw
-      else {
-        val keyed = raw
-          .withColumn(DvFileCol,
-            regexp_extract(col("_metadata.file_path"), FileRefRe, 1))
-          .withColumn(DvPosCol, col("_metadata.row_index"))
-        val dvd = dvRowsDf(spark, root, dv).fold(keyed)(antiDv(keyed, _))
-        antiEd(dvd, spark, root, eds).drop(DvFileCol, DvPosCol)
-      }
-    sch match {
-      case Some(s) => projectLogical(visible, s)
-      case None => visible
-    }
+      if (m.dvs.isEmpty && m.eqDeletes.isEmpty) raw
+      else antiEd(dvApplied(spark, root, m, withRefs(raw)), spark, root,
+        m.eqDeletes).drop(DvFileCol, DvPosCol)
+    m.logical.fold(visible)(projectLogical(visible, _))
   }
 
   /** Publish `df` as ONE parquet object `name` inside `dir` (staged
@@ -1119,10 +1115,9 @@ object VersionedTable {
       bloomCols: Seq[String] = Nil)(
       pick: DataFrame => DataFrame,
       extra: Option[DataFrame]): Long = {
-    val version = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"$root has no committed version"))
-    hideAndAppend(spark, root, version, keepVersions, statsCols,
-      bloomCols, pick(scanWithRefs(spark, root, version)), extra, None)
+    val m = currentManifest(spark, root)
+    hideAndAppend(spark, root, m, keepVersions, statsCols,
+      bloomCols, pick(scanWithRefs(spark, root, m)), extra, None)
   }
 
   /** Shared MoR commit tail: `picked` (a [[scanWithRefs]]-shaped
@@ -1131,12 +1126,13 @@ object VersionedTable {
     * carry set ([[resolveEqualityDeletes]] passes Some(Nil) — its
     * vector subsumes them). */
   private def hideAndAppend(spark: SparkSession, root: String,
-      version: Long, keepVersions: Int, statsCols: Seq[String],
+      m: Manifest, keepVersions: Int, statsCols: Seq[String],
       bloomCols: Seq[String], picked: DataFrame,
       extra: Option[DataFrame],
       edOverride: Option[Seq[EqDelete]]): Long = {
-    val files = filesAt(spark, root, version)
-    val dv = deleteVectors(spark, root, version)
+    val version = m.version
+    val files = filesIn(fsOf(spark, root), root, m)
+    val dv = m.dvs
     val newDel = picked
       .select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
       .persist()
@@ -1196,7 +1192,8 @@ object VersionedTable {
     // the state, so the same batch folds exactly once
     if (batchId.exists(id => lastFoldedBatch(spark, root).exists(_ >= id)))
       return 0L
-    val prevEds = equalityDeletes(spark, root, version)
+    val m = readable(spark, root, version)
+    val prevEds = m.eqDeletes
     prevEds.headOption.foreach(e => require(e.keyCols == keyCols,
       s"equality-delete key mismatch: table uses ${e.keyCols.mkString(",")}" +
         s", got ${keyCols.mkString(",")}"))
@@ -1205,7 +1202,7 @@ object VersionedTable {
     // corrupt reads silently (use Maintenance.alignAppend shapes for
     // schema evolution, then upsert)
     extra.foreach { e =>
-      val tbl = readVersion(spark, root, version).columns.map(_.toLowerCase).toSet
+      val tbl = readAt(spark, root, m).columns.map(_.toLowerCase).toSet
       val got = e.columns.map(_.toLowerCase).toSet
       require(got == tbl,
         s"upsert batch schema drift: batch has ${got.toSeq.sorted
@@ -1214,7 +1211,7 @@ object VersionedTable {
     val clean = keys.select(keyCols.map(col): _*).na.drop("any").distinct()
     val n = clean.count()
     if (n == 0 && extra.isEmpty) return 0L
-    val files = filesAt(spark, root, version)
+    val files = filesIn(fsOf(spark, root), root, m)
     val edRef = s"_v-${version + 1}/ed-${version + 1}.parquet"
     val newEd =
       if (n > 0) Seq(EqDelete(edRef, version, keyCols, n)) else Nil
@@ -1282,16 +1279,11 @@ object VersionedTable {
       keepVersions: Int = 1, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Long = {
     val version = currentVersion(spark, root).getOrElse(return 0L)
-    val eds = equalityDeletes(spark, root, version)
-    if (eds.isEmpty) return 0L
-    val keyed = rawReadVersion(spark, root, version)
-      .withColumn(DvFileCol,
-        regexp_extract(col("_metadata.file_path"), FileRefRe, 1))
-      .withColumn(DvPosCol, col("_metadata.row_index"))
-    val visible = dvRowsDf(spark, root, deleteVectors(spark, root, version))
-      .fold(keyed)(antiDv(keyed, _))
-    hideAndAppend(spark, root, version, keepVersions, statsCols,
-      bloomCols, semiEd(visible, spark, root, eds), None, Some(Nil))
+    val m = readable(spark, root, version)
+    if (m.eqDeletes.isEmpty) return 0L
+    val visible = dvApplied(spark, root, m, withRefs(rawRead(spark, root, m)))
+    hideAndAppend(spark, root, m, keepVersions, statsCols,
+      bloomCols, semiEd(visible, spark, root, m.eqDeletes), None, Some(Nil))
   }
 
   // ---- named tags (snapshot pins) -----------------------------------
@@ -1305,11 +1297,8 @@ object VersionedTable {
     val td = tagsDir(root)
     if (!fs.exists(td)) return Map.empty
     fs.listStatus(td).toSeq.filter(_.isFile).flatMap { st =>
-      val in = fs.open(st.getPath)
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      content.toLongOption.map(st.getPath.getName -> _)
+      graft.util.AtomicPut.readUtf8(fs, st.getPath).trim.toLongOption
+        .map(st.getPath.getName -> _)
     }.toMap
   }
 
@@ -1417,24 +1406,22 @@ object VersionedTable {
   private def branchesDir(root: String) = new Path(s"$root/_branches")
   private def branchPin(name: String) = s"_branch_$name"
   private val BranchName = "^[A-Za-z0-9_]+$".r
+  private val BaseLine = "^base\t(\\d+)$".r
 
-  /** (base version, head seq, root-relative files) of a branch. */
+  /** (base version, head seq, root-relative files) of a branch. Its
+    * manifest is a main manifest body whose header line is
+    * `base\t<base version>`; the codec reads its `f` lines. */
   private def branchState(fs: FileSystem, root: String,
       name: String): Option[(Long, Long, Seq[String])] = {
     val bd = new Path(branchesDir(root), name)
     if (!fs.exists(bd)) return None
     fs.listStatus(bd).toSeq.flatMap(_.getPath.getName.toLongOption)
       .maxOption.map { h =>
-        val in = fs.open(new Path(bd, h.toString))
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val lines = content.split("\n").toSeq
-        val base = lines.find(_.startsWith("base\t")).getOrElse(
-          throw new IllegalStateException(
+        val body = graft.util.AtomicPut.readUtf8(fs, new Path(bd, h.toString))
+        val base = body.linesIterator.collectFirst { case BaseLine(b) => b.toLong }
+          .getOrElse(throw new IllegalStateException(
             s"branch '$name' manifest $h on $root lacks a base line"))
-          .drop(5).toLong
-        (base, h, lines.filter(_.startsWith("f\t")).map(l => unesc(l.drop(2))))
+        (base, h, Manifest.parse(body).files)
       }
   }
 
@@ -1442,10 +1429,9 @@ object VersionedTable {
       name: String, seq: Long, base: Long, files: Seq[String]): Unit = {
     val bd = new Path(branchesDir(root), name)
     fs.mkdirs(bd)
-    val payload = (s"base\t$base" +: files.sorted.map(f => s"f\t${esc(f)}"))
-      .mkString("\n")
+    val body = Manifest.render(Manifest(seq, files = files))
     try graft.util.AtomicPut.putIfAbsent(fs, new Path(bd, seq.toString),
-      payload)
+      s"base\t$base" + body.dropWhile(_ != '\n'))
     catch {
       case e: java.io.IOException => throw new CommitConflictException(
         s"branch '$name' seq $seq on $root already exists — " +
@@ -1466,13 +1452,12 @@ object VersionedTable {
       throw new IllegalStateException(s"$root has no committed version"))
     require(!fs.exists(new Path(branchesDir(root), name)),
       s"branch '$name' already exists on $root")
-    require(deleteVectors(spark, root, base).isEmpty &&
-      equalityDeletes(spark, root, base).isEmpty,
+    val m = manifestOf(fs, root, base)
+    require(m.dvs.isEmpty && m.eqDeletes.isEmpty,
       s"version $base of $root carries merge-on-read deletes — " +
         "purgeDeletes/compact before branching")
     tag(spark, root, branchPin(name), Some(base))
-    writeBranchManifest(fs, root, name, 1L, base,
-      filesAt(spark, root, base))
+    writeBranchManifest(fs, root, name, 1L, base, filesIn(fs, root, m))
     base
   }
 
@@ -1500,16 +1485,12 @@ object VersionedTable {
     * exactly as a main read would after publish. */
   def readBranch(spark: SparkSession, root: String,
       name: String): DataFrame = {
-    val fs = fsOf(spark, root)
-    val (base, _, files) = branchState(fs, root, name).getOrElse(
-      throw new IllegalStateException(s"no branch '$name' on $root"))
-    val rd = manifestSchema(spark, root, base) match {
-      case Some(s) => spark.read.schema(physicalReadSchema(s))
-      case None => spark.read
-    }
-    val df = rd.parquet(files.map(f => s"$root/$f"): _*)
-    manifestSchema(spark, root, base)
-      .map(s => projectLogical(df, s)).getOrElse(df)
+    val (base, _, files) = branchState(fsOf(spark, root), root, name)
+      .getOrElse(throw new IllegalStateException(s"no branch '$name' on $root"))
+    // the base carries no merge-on-read deletes (createBranch refuses
+    // them), so this is the base's logical projection over `files`
+    readFilesWithDv(spark, root, manifestOf(spark, root, base),
+      files.map(f => s"$root/$f"))
   }
 
   /** Append a batch to a branch: data stages under the branch-scoped
@@ -1545,16 +1526,10 @@ object VersionedTable {
       .filter(st => st.isFile && isDataFile(st.getPath.getName))
       .map(_.getPath.getName).sorted
     require(newNames.nonEmpty, "empty branch append")
-    val cs = manifestConstraints(spark, root, base)
-    if (cs.nonEmpty) {
-      val newDf = spark.read.parquet(newNames.map(n => s"$stage/$n"): _*)
-      val (ls, _) = logicalSchemaOf(spark, root, base)
-      val have = newDf.columns.map(_.toLowerCase).toSet
-      val aligned = ls.fields.filterNot(f => have(f.name.toLowerCase))
-        .foldLeft(newDf)((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
-      enforceConstraints(fs, stage, aligned, cs)
-    }
+    val m = manifestOf(fs, root, base)
+    if (m.constraints.nonEmpty) enforceConstraints(fs, stage,
+      withLogicalNulls(spark, root, m,
+        spark.read.parquet(newNames.map(n => s"$stage/$n"): _*)), m.constraints)
     writeBranchManifest(fs, root, name, next, base,
       files ++ newNames.map(n => s"${stage.getName}/$n"))
     next
@@ -1599,11 +1574,7 @@ object VersionedTable {
     if (!fs.exists(bd)) return false
     fs.delete(bd, true)
     dropTag(spark, root, branchPin(name))
-    val referenced: Set[String] =
-      fs.listStatus(commitsDir(root)).toSeq
-        .flatMap(_.getPath.getName.toLongOption)
-        .flatMap(n => manifestFileRefs(fs, root, n)
-          .map(_.takeWhile(_ != '/'))).toSet
+    val referenced = liveDirs(fs, root, listedVersions(fs, root))
     fs.listStatus(new Path(root)).toSeq.foreach { st =>
       val nm = st.getPath.getName
       if (nm.startsWith(s"_v-b-$name-") && !referenced.contains(nm))
@@ -1640,15 +1611,13 @@ object VersionedTable {
         .map(n => (n, st.getModificationTime)))
       .sortBy(_._1)
       .map { case (n, mtime) =>
-        val fl = filesOf(spark, root, n)
-        val dir = new Path(dataDirOf(fs, root, n))
-        val nFiles = fl.map(_.size.toLong).getOrElse(
-          if (fs.exists(dir))
-            fs.listStatus(dir).count(st =>
-              st.isFile && isDataFile(st.getPath.getName)).toLong
-          else 0L)
-        Row(n, new java.sql.Timestamp(mtime), nFiles, fl.nonEmpty,
-          dir.getName, byVersion.getOrElse(n, Seq.empty))
+        val m = manifestOf(fs, root, n)
+        val dir = new Path(s"$root/${m.dir}")
+        val nFiles =
+          if (m.files.isEmpty && !fs.exists(dir)) 0L
+          else filesIn(fs, root, m).size.toLong
+        Row(n, new java.sql.Timestamp(mtime), nFiles, m.files.nonEmpty,
+          m.dir, byVersion.getOrElse(n, Seq.empty))
       }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
@@ -1658,85 +1627,42 @@ object VersionedTable {
 
   /** Per-file stats carried in a commit manifest. `min`/`max` are the
     * stringified column values (None = the file is all-NULL for that
-    * column → never pruned); `nulls` is the per-column null count
-    * (absent for manifests written before it was recorded). */
+    * column → never pruned); `nulls` is the per-column null count. */
   final case class FileStat(file: String, rows: Long,
       min: Map[String, Option[String]], max: Map[String, Option[String]],
-      nulls: Map[String, Long] = Map.empty)
-
-  private def esc(s: String): String = s
-    .replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n")
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '\\' => sb.append('\\'); i += 2
-          case 't'  => sb.append('\t'); i += 2
-          case 'n'  => sb.append('\n'); i += 2
-          case o    => sb.append(o); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-  private val NullMark = "\\N"
+      nulls: Map[String, Long])
 
   /** Key a scanned file: delta commits (`relKeys`) use the
     * root-relative `<verdir>/<name>` form so references across
     * version dirs stay unambiguous; whole-dir commits keep the bare
-    * name (legacy manifest compatibility). */
+    * name. */
   private def fileKey(abs: String, relKeys: Boolean): String = {
     val p = new Path(abs)
     if (relKeys) s"${p.getParent.getName}/${p.getName}" else p.getName
   }
 
-  /** One distributed aggregate over the fresh version dir: per-file
-    * row count + min/max of `cols`, serialized as manifest payload
-    * lines (`s \t file \t rows \t col \t min \t max`). Only the
-    * file-count-sized stat table reaches the driver. */
-  private def collectFileStats(spark: SparkSession, dataDir: String,
-      cols: Seq[String]): String =
-    collectFileStats(spark, Seq(dataDir), cols, relKeys = false)
-
+  /** One distributed aggregate over `sources`: per-file row count plus
+    * min/max/null count of `cols`. Only the file-count-sized stat
+    * table reaches the driver. */
   private def collectFileStats(spark: SparkSession, sources: Seq[String],
-      cols: Seq[String], relKeys: Boolean): String = {
+      cols: Seq[String], relKeys: Boolean): Seq[FileStat] = {
     import org.apache.spark.sql.functions.{count, input_file_name, max, min, lit}
-    val df = spark.read.parquet(sources: _*)
+    if (cols.isEmpty || sources.isEmpty) return Nil
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).cast("string").as(s"min_$c"),
         max(col(c)).cast("string").as(s"max_$c"),
         count(col(c)).as(s"nn_$c"))) :+
       count(lit(1)).as("_rows")
-    val rows = df.withColumn("_file", input_file_name())
+    val rows = spark.read.parquet(sources: _*)
+      .withColumn("_file", input_file_name())
       .groupBy("_file").agg(aggs.head, aggs.tail: _*)
       .collect()
-    rows.flatMap { r =>
-      val file = fileKey(r.getAs[String]("_file"), relKeys)
+    rows.toSeq.map { r =>
       val n = r.getAs[Long]("_rows")
-      cols.map { c =>
-        val mn = Option(r.getAs[String](s"min_$c")).map(esc).getOrElse(NullMark)
-        val mx = Option(r.getAs[String](s"max_$c")).map(esc).getOrElse(NullMark)
-        val nulls = n - r.getAs[Long](s"nn_$c")
-        s"s\t${esc(file)}\t$n\t${esc(c)}\t$mn\t$mx\t$nulls"
-      }
-    }.sorted.mkString("\n")
-  }
-
-  /** Re-serialize a previous manifest's stats for a carried file under
-    * its root-relative key — a delta commit copies instead of
-    * re-scanning. */
-  private def statLines(key: String, s: FileStat): Seq[String] = {
-    val cols = (s.min.keySet ++ s.max.keySet).toSeq.sorted
-    cols.map { c =>
-      val mn = s.min.getOrElse(c, None).map(esc).getOrElse(NullMark)
-      val mx = s.max.getOrElse(c, None).map(esc).getOrElse(NullMark)
-      s.nulls.get(c) match {
-        case Some(nu) => s"s\t${esc(key)}\t${s.rows}\t${esc(c)}\t$mn\t$mx\t$nu"
-        case None => s"s\t${esc(key)}\t${s.rows}\t${esc(c)}\t$mn\t$mx"
-      }
+      FileStat(fileKey(r.getAs[String]("_file"), relKeys), n,
+        cols.map(c => c -> Option(r.getAs[String](s"min_$c"))).toMap,
+        cols.map(c => c -> Option(r.getAs[String](s"max_$c"))).toMap,
+        cols.map(c => c -> (n - r.getAs[Long](s"nn_$c"))).toMap)
     }
   }
 
@@ -1747,18 +1673,14 @@ object VersionedTable {
     * distributed aggregate per bloomed column: k bit positions per
     * non-null value via the builtin `xxhash64(value, j)` (j = hash
     * index), `collect_set` of the ≤`bits` positions per file, driver
-    * packs them into a BitSet → base64 manifest line
-    * (`b \t file \t col \t bits \t k \t b64`). Legacy readers ignore
-    * the lines (the stats parser keeps only `s\t`). Size: bits/8
-    * bytes per (file, col) — KBs per thousand files. */
-  private def collectFileBlooms(spark: SparkSession, dataDir: String,
-      cols: Seq[String], bits: Int, k: Int): String =
-    collectFileBlooms(spark, Seq(dataDir), cols, bits, k, relKeys = false)
-
+    * packs them into a BitSet. Size: bits/8 bytes per (file, col) —
+    * KBs per thousand files. */
   private def collectFileBlooms(spark: SparkSession, sources: Seq[String],
-      cols: Seq[String], bits: Int, k: Int, relKeys: Boolean): String = {
+      cols: Seq[String], bits: Int, k: Int, relKeys: Boolean)
+      : Map[(String, String), (Int, Int, java.util.BitSet)] = {
     import org.apache.spark.sql.functions.{explode, input_file_name, lit,
       pmod, sequence, xxhash64, collect_set}
+    if (cols.isEmpty || sources.isEmpty) return Map.empty
     require(bits > 0 && bits % 8 == 0, s"bloomBits=$bits must be byte-sized")
     require(k >= 1 && k <= 16, s"bloomHashes=$k out of range")
     val df = spark.read.parquet(sources: _*)
@@ -1775,38 +1697,16 @@ object VersionedTable {
         .map { r =>
           val bs = new java.util.BitSet(bits)
           r.getSeq[Int](1).foreach(bs.set)
-          val b64 = java.util.Base64.getEncoder.encodeToString(bs.toByteArray)
-          val file = fileKey(r.getString(0), relKeys)
-          s"b\t${esc(file)}\t${esc(c)}\t$bits\t$k\t$b64"
+          (fileKey(r.getString(0), relKeys), c) -> (bits, k, bs)
         }
-    }.sorted.mkString("\n")
-  }
-
-  /** Re-serialize a previous manifest's bloom for a carried file. */
-  private def bloomLine(key: String, c: String, bits: Int, k: Int,
-      bs: java.util.BitSet): String = {
-    val b64 = java.util.Base64.getEncoder.encodeToString(bs.toByteArray)
-    s"b\t${esc(key)}\t${esc(c)}\t$bits\t$k\t$b64"
+    }.toMap
   }
 
   /** The blooms a version's manifest carries:
     * (file, col) → (bits, k, bitset). */
   def manifestBlooms(spark: SparkSession, root: String, version: Long)
-      : Map[(String, String), (Int, Int, java.util.BitSet)] = {
-    val fs = fsOf(spark, root)
-    val p = new Path(commitsDir(root), version.toString)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    content.split("\n").toSeq.filter(_.startsWith("b\t"))
-      .map(_.split("\t", -1))
-      .collect { case Array("b", f, c, bits, k, b64) =>
-        (unesc(f), unesc(c)) -> (bits.toInt, k.toInt,
-          java.util.BitSet.valueOf(java.util.Base64.getDecoder.decode(b64)))
-      }.toMap
-  }
+      : Map[(String, String), (Int, Int, java.util.BitSet)] =
+    manifestOf(spark, root, version).blooms
 
   /** The driver-side twin of the write-side `xxhash64(value, j)` bit:
     * the SAME builtin hash evaluated on a literal cast to the
@@ -1821,75 +1721,63 @@ object VersionedTable {
     java.lang.Math.floorMod(h, bits.toLong).toInt
   }
 
+  /** A planner's inputs, from ONE fetch of the current manifest (which
+    * must carry stats): the manifest; its file universe — the file
+    * list when present (delta commits), else the files its stats name
+    * — each with its stats (None = stat-less, planned conservatively);
+    * and the table schema. */
+  private def planInputs(spark: SparkSession, root: String)
+      : (Manifest, Seq[(String, Option[FileStat])], StructType) = {
+    val m = currentManifest(spark, root)
+    require(m.stats.nonEmpty,
+      s"version ${m.version} of $root carries no file stats")
+    val byFile = m.stats.map(s => s.file -> s).toMap
+    val universe = if (m.files.nonEmpty) m.files else m.stats.map(_.file)
+    (m, universe.map(f => f -> byFile.get(f)), readAt(spark, root, m).schema)
+  }
+
+  /** False only when `f`'s bloom for `c` rules `value` out; a file
+    * without one is kept (sound, never silently wrong). */
+  private def bloomMayContain(m: Manifest, f: String, c: String,
+      value: Any, dt: DataType): Boolean =
+    m.blooms.get((f, c)).forall { case (bits, k, bs) =>
+      (0 until k).forall(j => bs.get(bloomBit(value, dt, j, bits)))
+    }
+
   /** Point-lookup file pruning: keep only files whose bloom MAY
     * contain `value` (files without a bloom for `colName` are kept
     * conservatively — so the result is always sound, never silently
     * wrong). Where min/max ranges overlap everywhere, this is the
     * planner a needle-in-100-TB id lookup needs. */
   def prunedFilesEq(spark: SparkSession, root: String, colName: String,
-      value: Any): Seq[String] = {
-    val version = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"$root has no committed version"))
-    val dir = currentPath(spark, root)
-    val stats = manifestStats(spark, root, version)
-    require(stats.nonEmpty, s"version $version of $root carries no file stats")
-    val blooms = manifestBlooms(spark, root, version)
-    val dt = read(spark, root).schema(colName).dataType
-    val universe = filesOf(spark, root, version).getOrElse(stats.map(_.file))
-    universe.filter { f =>
-      blooms.get((f, colName)) match {
-        case None => true // no bloom recorded → cannot rule out
-        case Some((bits, k, bs)) =>
-          (0 until k).forall(j => bs.get(bloomBit(value, dt, j, bits)))
-      }
-    }.map(f => resolveFile(root, dir, f))
+      value: Any): Seq[String] =
+    prunedEq(spark, root, colName, value)._2
+
+  private def prunedEq(spark: SparkSession, root: String, colName: String,
+      value: Any): (Manifest, Seq[String]) = {
+    val (m, universe, schema) = planInputs(spark, root)
+    val dt = schema(colName).dataType
+    (m, universe.map(_._1).filter(bloomMayContain(m, _, colName, value, dt))
+      .map(f => s"$root/${m.rel(f)}"))
   }
 
   /** [[prunedFilesEq]] + read + the exact equality filter: the
     * manifest-planned point lookup. */
   def readPointLookup(spark: SparkSession, root: String, colName: String,
       value: Any): DataFrame = {
-    val files = prunedFilesEq(spark, root, colName, value)
+    val (m, files) = prunedEq(spark, root, colName, value)
     val base =
-      if (files.isEmpty) read(spark, root).limit(0)
-      else readFilesWithDv(spark, root,
-        currentVersion(spark, root).get, files)
+      if (files.isEmpty) readAt(spark, root, m).limit(0)
+      else readFilesWithDv(spark, root, m, files)
     val dt = base.schema(colName).dataType
-    base.filter(col(colName) === org.apache.spark.sql.functions
-      .lit(value).cast(dt))
+    base.filter(col(colName) === lit(value).cast(dt))
   }
 
   /** The file stats a version's manifest carries (empty for manifests
-    * committed without `statsCols` and for legacy tables). */
+    * committed without `statsCols`). */
   def manifestStats(spark: SparkSession, root: String,
-      version: Long): Seq[FileStat] = {
-    val fs = fsOf(spark, root)
-    val p = new Path(commitsDir(root), version.toString)
-    if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val perFile = content.split("\n").toSeq.filter(_.startsWith("s\t"))
-      .map(_.split("\t", -1))
-      .collect {
-        case Array("s", f, n, c, mn, mx) => // pre-null-count manifests
-          (unesc(f), n.toLong, unesc(c),
-            if (mn == NullMark) None else Some(unesc(mn)),
-            if (mx == NullMark) None else Some(unesc(mx)),
-            None: Option[Long])
-        case Array("s", f, n, c, mn, mx, nulls) =>
-          (unesc(f), n.toLong, unesc(c),
-            if (mn == NullMark) None else Some(unesc(mn)),
-            if (mx == NullMark) None else Some(unesc(mx)),
-            Some(nulls.toLong))
-      }
-    perFile.groupBy(t => (t._1, t._2)).map { case ((f, n), ts) =>
-      FileStat(f, n,
-        ts.map(t => t._3 -> t._4).toMap, ts.map(t => t._3 -> t._5).toMap,
-        ts.flatMap(t => t._6.map(t._3 -> _)).toMap)
-    }.toSeq.sortBy(_.file)
-  }
+      version: Long): Seq[FileStat] =
+    manifestOf(spark, root, version).stats
 
   /** Metadata-first range COUNT: `count(*)` for `lower <= col <=
     * upper` where files FULLY CONTAINED in the bound (min ≥ lower,
@@ -1900,67 +1788,8 @@ object VersionedTable {
     * table size: the aggregate-pushdown-to-metadata shape table
     * formats serve. Returns (count, filesScanned). */
   def countWhere(spark: SparkSession, root: String, colName: String,
-      lower: Any, upper: Any): (Long, Int) = {
-    val version = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"$root has no committed version"))
-    val dir = currentPath(spark, root)
-    val stats = manifestStats(spark, root, version)
-    require(stats.nonEmpty, s"version $version of $root carries no file stats")
-    val dt = read(spark, root).schema(colName).dataType
-    import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    // stat-less files (possible under delta manifests) cannot be
-    // metadata-answered: all-null stats → overlap, never contained
-    val byFile = stats.map(s => s.file -> s).toMap
-    val universe = filesOf(spark, root, version).getOrElse(stats.map(_.file))
-    // deletion vectors: stats describe the PHYSICAL file, so a
-    // fully-contained dv'd file answers rows − deleted only when the
-    // column has no nulls (per-file stats can't say how deleted and
-    // null rows overlap); otherwise it joins the boundary scan, which
-    // is DV-applied.
-    val dv = deleteVectors(spark, root, version)
-    // equality deletes hide an UNKNOWN number of rows per scoped file
-    // (the commit never counted them), so any file in ED scope must
-    // take the boundary scan — which is ED-applied, keeping the total
-    // exact at the price the ED commit deferred.
-    val eds = equalityDeletes(spark, root, version)
-    val dirName = new Path(dir).getName
-    def rel(f: String): String =
-      if (f.contains('/')) f else s"$dirName/$f"
-    def dvCount(f: String): Long = dv.get(rel(f)).map(_._2).getOrElse(0L)
-    def edScoped(f: String): Boolean =
-      eds.exists(e => refSeq(rel(f)) <= e.seq)
-    val st = universe.map { f =>
-      val s = byFile.get(f)
-      (f, s.map(_.rows),
-        s.flatMap(_.min.getOrElse(colName, None)),
-        s.flatMap(_.max.getOrElse(colName, None)),
-        s.flatMap(_.nulls.get(colName)), dvCount(f), edScoped(f))
-    }.toDF("file", "rows", "mn", "mx", "nulls", "deleted", "ed")
-    val overlaps = col("mn").isNull || col("mx").isNull ||
-      (col("mx").cast(dt) >= lit(lower) && col("mn").cast(dt) <= lit(upper))
-    val contained = col("rows").isNotNull &&
-      col("mn").isNotNull && col("mx").isNotNull &&
-      col("nulls").isNotNull && !col("ed") &&
-      (col("deleted") === 0L || col("nulls") === 0L) &&
-      col("mn").cast(dt) >= lit(lower) && col("mx").cast(dt) <= lit(upper)
-    val parts = st.filter(overlaps)
-      .select(col("file"), col("rows"), col("nulls"), col("deleted"),
-        contained.as("full"))
-      .collect()
-    val metaCount = parts.filter(_.getAs[Boolean]("full"))
-      .map(r => r.getAs[Long]("rows") - r.getAs[Long]("nulls") -
-        r.getAs[Long]("deleted")).sum
-    val boundary = parts.filter(!_.getAs[Boolean]("full"))
-      .map(r => resolveFile(root, dir, r.getAs[String]("file")))
-    val scanned =
-      if (boundary.isEmpty) 0L
-      else readFilesWithDv(spark, root, version, boundary.toSeq)
-        .filter(col(colName).cast(dt) >= lit(lower) &&
-          col(colName).cast(dt) <= lit(upper))
-        .count()
-    (metaCount + scanned, boundary.length)
-  }
+      lower: Any, upper: Any): (Long, Int) =
+    countWhereAll(spark, root, Seq((colName, lower, upper)))
 
   /** Conjunction form of [[countWhere]]: `count(*)` for an N-D box
     * (every `lower <= col <= upper` bound at once) — the consumer
@@ -1971,37 +1800,28 @@ object VersionedTable {
     * exactly only then: count = rows − that column's nulls; with two
     * null-bearing columns the overlap is unknowable from per-column
     * stats, so the file conservatively joins the boundary scan).
-    * Returns (count, filesScanned). */
+    * Stat-less files are never metadata-answered: all-null stats →
+    * overlap, never contained. Returns (count, filesScanned). */
   def countWhereAll(spark: SparkSession, root: String,
       bounds: Seq[(String, Any, Any)]): (Long, Int) = {
     require(bounds.nonEmpty, "at least one (col, lower, upper) bound")
-    val version = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"$root has no committed version"))
-    val dir = currentPath(spark, root)
-    val stats = manifestStats(spark, root, version)
-    require(stats.nonEmpty, s"version $version of $root carries no file stats")
-    val schema = read(spark, root).schema
+    val (m, universe, schema) = planInputs(spark, root)
     import spark.implicits._
-    import org.apache.spark.sql.functions.lit
     val cols = bounds.map(_._1)
-    val byFile = stats.map(s => s.file -> s).toMap
-    val universe = filesOf(spark, root, version).getOrElse(stats.map(_.file))
-    // deletion vectors: same rule as countWhere — a dv'd file only
-    // answers from metadata when every bounded column is null-free
-    // in it (then count = rows − nulls(=0) − deleted); the ≤1-null
-    // composition rule below collapses to exactly that.
-    val dv = deleteVectors(spark, root, version)
-    // same ED rule as countWhere: scoped files can't be
-    // metadata-answered, the (ED-applied) boundary scan keeps it exact
-    val eds = equalityDeletes(spark, root, version)
-    val dirName = new Path(dir).getName
-    def rel(f: String): String =
-      if (f.contains('/')) f else s"$dirName/$f"
-    def dvCount(f: String): Long = dv.get(rel(f)).map(_._2).getOrElse(0L)
+    // deletion vectors: stats describe the PHYSICAL file, so a
+    // fully-contained dv'd file answers rows − deleted only when every
+    // bounded column is null-free in it (per-file stats can't say how
+    // deleted and null rows overlap); the ≤1-null composition rule
+    // below collapses to exactly that. Otherwise it joins the boundary
+    // scan, which is DV-applied.
+    def dvCount(f: String): Long = m.dvs.get(m.rel(f)).map(_._2).getOrElse(0L)
+    // equality deletes hide an UNKNOWN number of rows per scoped file
+    // (the commit never counted them), so any file in ED scope must
+    // take the boundary scan — which is ED-applied, keeping the total
+    // exact at the price the ED commit deferred.
     def edScoped(f: String): Boolean =
-      eds.exists(e => refSeq(rel(f)) <= e.seq)
-    val st = universe.map { f =>
-      val s = byFile.get(f)
+      m.eqDeletes.exists(e => refSeq(m.rel(f)) <= e.seq)
+    val st = universe.map { case (f, s) =>
       (f, s.map(_.rows),
         cols.map(c => s.flatMap(_.min.getOrElse(c, None))),
         cols.map(c => s.flatMap(_.max.getOrElse(c, None))),
@@ -2030,10 +1850,10 @@ object VersionedTable {
     val metaCount = meta
       .map(r => r.getAs[Long]("rows") - r.getAs[Seq[Long]]("nulls").sum -
         r.getAs[Long]("deleted")).sum
-    val files = boundary.map(r => resolveFile(root, dir, r.getAs[String]("file")))
+    val files = boundary.map(r => s"$root/${m.rel(r.getAs[String]("file"))}")
     val scanned =
       if (files.isEmpty) 0L
-      else readFilesWithDv(spark, root, version, files.toSeq)
+      else readFilesWithDv(spark, root, m, files.toSeq)
         .filter(bounds.map { case (c, lo, hi) =>
           val dt = schema(c).dataType
           col(c).cast(dt) >= lit(lo) && col(c).cast(dt) <= lit(hi)
@@ -2063,23 +1883,16 @@ object VersionedTable {
     * inside a box prunes like [[prunedFilesEq]] — range and bloom
     * skipping compose in one planner. */
   def prunedFilesWhere(spark: SparkSession, root: String,
-      bounds: Seq[(String, Any, Any)]): Seq[String] = {
+      bounds: Seq[(String, Any, Any)]): Seq[String] =
+    prunedWhere(spark, root, bounds)._2
+
+  private def prunedWhere(spark: SparkSession, root: String,
+      bounds: Seq[(String, Any, Any)]): (Manifest, Seq[String]) = {
     require(bounds.nonEmpty, "at least one (col, lower, upper) bound")
-    val version = currentVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"$root has no committed version"))
-    val dir = currentPath(spark, root)
-    val stats = manifestStats(spark, root, version)
-    require(stats.nonEmpty, s"version $version of $root carries no file stats")
-    val schema = read(spark, root).schema
+    val (m, universe, schema) = planInputs(spark, root)
     import spark.implicits._
-    import org.apache.spark.sql.functions.lit
     val cols = bounds.map(_._1)
-    // universe = the manifest's file LIST when present (delta commits);
-    // files the manifest carries no stats for are kept conservatively
-    val byFile = stats.map(s => s.file -> s).toMap
-    val universe = filesOf(spark, root, version).getOrElse(stats.map(_.file))
-    val st = universe.map { f =>
-      val s = byFile.get(f)
+    val st = universe.map { case (f, s) =>
       (f, cols.map(c => s.flatMap(_.min.getOrElse(c, None))),
         cols.map(c => s.flatMap(_.max.getOrElse(c, None))))
     }.toDF("file", "mns", "mxs")
@@ -2093,21 +1906,9 @@ object VersionedTable {
     val ranged = st.filter(keep)
       .select("file").collect().map(_.getString(0)).toSeq
     val points = bounds.filter { case (_, lo, hi) => lo == hi }
-    val kept =
-      if (points.isEmpty) ranged
-      else {
-        val blooms = manifestBlooms(spark, root, version)
-        ranged.filter { f =>
-          points.forall { case (c, v, _) =>
-            blooms.get((f, c)) match {
-              case None => true // no bloom recorded → cannot rule out
-              case Some((bits, k, bs)) => (0 until k).forall(j =>
-                bs.get(bloomBit(v, schema(c).dataType, j, bits)))
-            }
-          }
-        }
-      }
-    kept.map(f => resolveFile(root, dir, f))
+    (m, ranged.filter(f => points.forall { case (c, v, _) =>
+      bloomMayContain(m, f, c, v, schema(c).dataType)
+    }).map(f => s"$root/${m.rel(f)}"))
   }
 
   /** [[prunedFiles]] + read: the manifest-planned range scan. */
@@ -2118,12 +1919,10 @@ object VersionedTable {
   /** [[prunedFilesWhere]] + read: the conjunction range scan. */
   def readPrunedWhere(spark: SparkSession, root: String,
       bounds: Seq[(String, Any, Any)]): DataFrame = {
-    val files = prunedFilesWhere(spark, root, bounds)
-    if (files.isEmpty) {
-      // preserve the schema on an empty plan
-      read(spark, root).limit(0)
-    } else readFilesWithDv(spark, root,
-      currentVersion(spark, root).get, files)
+    val (m, files) = prunedWhere(spark, root, bounds)
+    // an empty plan still carries the table's schema
+    if (files.isEmpty) readAt(spark, root, m).limit(0)
+    else readFilesWithDv(spark, root, m, files)
   }
 
   /** CDC feed between two retained versions (both inside the
@@ -2194,18 +1993,15 @@ object VersionedTable {
     * with its own retry: if the manifest exists, that commit
     * SUCCEEDED — data completes before the manifest — so the retry
     * computes the next version. */
-  private def publishManifest(fs: FileSystem, root: String, n: Long,
-      payload: String = "", dataDirName: Option[String] = None): Unit = {
-    val body = (Seq(n.toString) ++ dataDirName.map(d => s"d\t$d") ++
-      Option(payload).filter(_.nonEmpty)).mkString("\n")
+  private def publishManifest(fs: FileSystem, root: String,
+      m: Manifest): Unit =
     try graft.util.AtomicPut.putIfAbsent(
-      fs, new Path(commitsDir(root), n.toString), body)
+      fs, new Path(commitsDir(root), m.version.toString), Manifest.render(m))
     catch {
       case e: java.io.IOException => throw new CommitConflictException(
-        s"concurrent commit detected: version $n of $root was published " +
-          "by another writer", e)
+        s"concurrent commit detected: version ${m.version} of $root was " +
+          "published by another writer", e)
     }
-  }
 
   /** OPTIMISTIC-CONCURRENCY commit: the multi-writer form. Each
     * attempt computes the new table contents FROM the current version
@@ -2243,17 +2039,14 @@ object VersionedTable {
         s"writer did not complete a parquet commit under $data")
       // constraints gate and carry exactly as in the plain commit; a
       // violating attempt never reaches the manifest race
-      val cs = base.map(v => manifestConstraints(spark, root, v))
-        .getOrElse(Nil)
+      val cs = base.map(v => manifestOf(fs, root, v).constraints).getOrElse(Nil)
       if (cs.nonEmpty)
         enforceConstraints(fs, data, spark.read.parquet(data.toString), cs)
-      val stats =
-        if (statsCols.isEmpty) ""
-        else collectFileStats(spark, data.toString, statsCols)
-      val payload = Seq(constraintLines(cs), stats)
-        .filter(_.nonEmpty).mkString("\n")
+      val stats = collectFileStats(spark, Seq(data.toString), statsCols,
+        relKeys = false)
       try {
-        publishManifest(fs, root, next, payload, Some(dirName))
+        publishManifest(fs, root,
+          Manifest(next, Some(dirName), constraints = cs, stats = stats))
         prune(fs, root, next - math.max(1, keepVersions))
         return next
       } catch {
@@ -2290,15 +2083,12 @@ object VersionedTable {
     val rootP = new Path(root)
     val cd = commitsDir(root)
     if (!fs.exists(rootP) || !fs.exists(cd)) return Seq.empty
-    val referenced: Set[String] = (fs.listStatus(cd).toSeq
-      .flatMap(st => st.getPath.getName.toLongOption)
-      .flatMap(n => new Path(dataDirOf(fs, root, n)).getName +:
-        manifestFileRefs(fs, root, n).map(_.takeWhile(_ != '/')))
+    val referenced = liveDirs(fs, root, listedVersions(fs, root)) ++
       // live branches' refs pin their staged `_v-b-*` dirs (and any
       // base dirs their manifests carry) exactly like main manifests
-      ++ branches(spark, root).keys.toSeq
+      branches(spark, root).keys.toSeq
         .flatMap(b => branchState(fs, root, b).toSeq
-          .flatMap(_._3.map(_.takeWhile(_ != '/'))))).toSet
+          .flatMap(_._3.map(_.takeWhile(_ != '/'))))
     val cutoff = System.currentTimeMillis() - olderThanMs
     val victims = fs.listStatus(rootP).toSeq.filter { st =>
       val name = st.getPath.getName
@@ -2340,7 +2130,7 @@ object VersionedTable {
   def lastFoldedBatchAt(spark: SparkSession, root: String,
       version: Long): Option[Long] = {
     val fs = fsOf(spark, root)
-    val dir = new Path(dataDirOf(fs, root, version))
+    val dir = new Path(s"$root/${manifestOf(fs, root, version).dir}")
     if (!fs.exists(dir)) return None
     fs.listStatus(dir).toSeq.flatMap(st => st.getPath.getName match {
       case BatchMarker(n) => Some(n.toLong)
@@ -2359,9 +2149,7 @@ object VersionedTable {
     val fs = fsOf(spark, root)
     val cd = commitsDir(root)
     if (!fs.exists(cd)) return None
-    fs.listStatus(cd).toSeq
-      .flatMap(st => st.getPath.getName.toLongOption)
-      .sorted(Ordering[Long].reverse)
+    listedVersions(fs, root).sorted(Ordering[Long].reverse)
       .find(v => lastFoldedBatchAt(spark, root, v).exists(_ <= batchId))
   }
 
@@ -2378,9 +2166,8 @@ object VersionedTable {
   // physical one: ADD / DROP / RENAME COLUMN (and a safe type widen)
   // are each ONE manifest PUT that carries every data file by
   // reference — at 100 TB the difference between an instant DDL and a
-  // full-table rewrite. The manifest gains a schema line
-  // (`h \t <StructType json> \t <dropped physical names…>`); legacy
-  // readers ignore it (every parser here keys on its own line tag).
+  // full-table rewrite. The manifest gains the `h` line: the logical
+  // StructType and the dropped physical names.
   //
   // Read model: files are scanned under the PHYSICAL UNION schema
   // (logical fields plus each field's pre-rename names, absent
@@ -2409,33 +2196,14 @@ object VersionedTable {
     * name tombstones), if the table has been ALTERed. */
   def manifestSchema(spark: SparkSession, root: String,
       version: Long): Option[StructType] =
-    manifestSchemaLine(spark, root, version).map(_._1)
+    manifestOf(spark, root, version).logical
 
   /** Physical names no longer reachable from the logical schema —
     * refused for re-ADD/RENAME targets (stale bytes survive in
     * carried files). */
   def droppedNames(spark: SparkSession, root: String,
       version: Long): Seq[String] =
-    manifestSchemaLine(spark, root, version).map(_._2).getOrElse(Nil)
-
-  private def manifestSchemaLine(spark: SparkSession, root: String,
-      version: Long): Option[(StructType, Seq[String])] = {
-    val fs = fsOf(spark, root)
-    val p = new Path(commitsDir(root), version.toString)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    content.split("\n").find(_.startsWith("h\t")).map { l =>
-      val parts = l.split("\t", -1)
-      (DataType.fromJson(unesc(parts(1))).asInstanceOf[StructType],
-        parts.drop(2).map(unesc).toSeq)
-    }
-  }
-
-  private def schemaLine(s: StructType, dropped: Seq[String]): String =
-    (Seq("h", esc(s.json)) ++ dropped.map(esc)).mkString("\t")
+    manifestOf(spark, root, version).schema.map(_._2).getOrElse(Nil)
 
   /** The union scan schema: every logical field at its logical type,
     * plus each field's pre-rename physical names (same type — renames
@@ -2516,13 +2284,22 @@ object VersionedTable {
     * physical schema for never-ALTERed tables (metadata stripped so
     * ALTER starts from a clean slate). */
   private def logicalSchemaOf(spark: SparkSession, root: String,
-      version: Long): (StructType, Seq[String]) =
-    manifestSchemaLine(spark, root, version).getOrElse {
-      val phys = rawReadVersion(spark, root, version).schema
+      m: Manifest): (StructType, Seq[String]) =
+    m.schema.getOrElse {
+      val phys = rawRead(spark, root, m).schema
       (StructType(phys.fields.map(f =>
         org.apache.spark.sql.types.StructField(f.name, f.dataType,
           f.nullable))), Nil)
     }
+
+  /** `df` plus a typed NULL column for every logical column it lacks. */
+  private def withLogicalNulls(spark: SparkSession, root: String,
+      m: Manifest, df: DataFrame): DataFrame = {
+    val have = df.columns.map(_.toLowerCase).toSet
+    logicalSchemaOf(spark, root, m)._1.fields
+      .filterNot(f => have(f.name.toLowerCase))
+      .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+  }
 
   /** Metadata-only schema change: ONE delta commit carrying every
     * current file by reference, whose manifest declares the new
@@ -2532,9 +2309,10 @@ object VersionedTable {
       (xform: (StructType, Seq[String]) => (StructType, Seq[String])): Long = {
     val v = currentVersion(spark, root).getOrElse(throw
       new IllegalStateException(s"$root has no committed version to ALTER"))
-    val (cur, dropped) = logicalSchemaOf(spark, root, v)
+    val m = readable(spark, root, v)
+    val (cur, dropped) = logicalSchemaOf(spark, root, m)
     val (next, nextDropped) = xform(cur, dropped)
-    commitDelta(spark, root, currentFiles(spark, root), keepVersions,
+    commitDelta(spark, root, filesIn(fsOf(spark, root), root, m), keepVersions,
       schemaOverride = Some((next, nextDropped)))(_ => ())
   }
 
@@ -2721,7 +2499,7 @@ object VersionedTable {
     * mirror too). */
   def adoptSchema(spark: SparkSession, root: String, fromRoot: String,
       fromVersion: Long, keepVersions: Int = 1): Long = {
-    val (s, dropped) = manifestSchemaLine(spark, fromRoot, fromVersion)
+    val (s, dropped) = manifestOf(spark, fromRoot, fromVersion).schema
       .getOrElse(throw new IllegalStateException(
         s"$fromRoot@$fromVersion declares no logical schema to adopt — " +
           "its mapping was discarded by a full rewrite; rewrite this " +
@@ -2751,7 +2529,8 @@ object VersionedTable {
       return commit(spark, root, keepVersions, statsCols, bloomCols) { st =>
         batch.write.mode(SaveMode.Overwrite).parquet(st)
       })
-    val (cur, dropped) = logicalSchemaOf(spark, root, v)
+    val m = readable(spark, root, v)
+    val (cur, dropped) = logicalSchemaOf(spark, root, m)
     val used = allNamesInUse(cur, dropped)
     val curByName = cur.fields.map(f => f.name.toLowerCase -> f).toMap
     val widened = cur.fields.map { f =>
@@ -2785,11 +2564,11 @@ object VersionedTable {
         col(s"`${f.name}`").cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    val hadLine = manifestSchemaLine(spark, root, v).nonEmpty
-    commitDelta(spark, root, currentFiles(spark, root), keepVersions,
-      statsCols, bloomCols,
+    commitDelta(spark, root, filesIn(fsOf(spark, root), root, m),
+      keepVersions, statsCols, bloomCols,
       schemaOverride =
-        if (changed || hadLine) Some((evolved, dropped)) else None) { st =>
+        if (changed || m.schema.nonEmpty) Some((evolved, dropped))
+        else None) { st =>
       aligned.write.mode(SaveMode.Overwrite).parquet(st)
     }
   }

@@ -216,11 +216,8 @@ object VectorIndex {
     val affected: Seq[Long] =
       if (fs.exists(affectedFile)) {
         // crashed mid-swap: resume from the committed worklist
-        val in = fs.open(affectedFile)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        content.split("\n").toSeq.filter(_.nonEmpty).map(_.toLong)
+        graft.util.AtomicPut.readUtf8(fs, affectedFile)
+          .split("\n").toSeq.filter(_.nonEmpty).map(_.toLong)
       } else {
         val hit = fs.listStatus(subDir).toSeq
           .filter(st => st.isDirectory &&
@@ -375,14 +372,11 @@ object VectorIndex {
     val affected: Seq[(Long, Boolean)] =
       if (staged) {
         // crashed mid-swap: resume from the committed worklist
-        val in = fs.open(affectedFile)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        content.split("\n").toSeq.filter(_.nonEmpty).map { l =>
-          val e = l.endsWith(":empty")
-          (l.stripSuffix(":empty").toLong, e)
-        }
+        graft.util.AtomicPut.readUtf8(fs, affectedFile)
+          .split("\n").toSeq.filter(_.nonEmpty).map { l =>
+            val e = l.endsWith(":empty")
+            (l.stripSuffix(":empty").toLong, e)
+          }
       } else {
         val all = spark.read.parquet(s"$rt/$sub")
         // partition-column type inference reads cent_id back as int
@@ -510,15 +504,10 @@ object VectorIndex {
     val fs = fsOf(spark, root)
     val p = new org.apache.hadoop.fs.Path(s"$root/_params")
     if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      content.split("\n").toSeq.filter(_.contains("="))
-        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
-        .toMap
-    }
+    else graft.util.AtomicPut.readUtf8(fs, p)
+      .split("\n").toSeq.filter(_.contains("="))
+      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
+      .toMap
   }
 
   /** In-process caches for the two per-search metadata counts the

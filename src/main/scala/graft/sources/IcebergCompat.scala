@@ -16,6 +16,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.AtomicPut
+
 /** READ-ONLY Apache Iceberg compatibility reader (r11 verdict
   * residual 3 — the second-in-line interop gap after Delta).
   * Implements the PUBLISHED Iceberg table spec
@@ -110,10 +112,7 @@ object IcebergCompat {
 
   private def readJson(spark: SparkSession, p: Path): JsonNode = {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    mapper.readTree(txt)
+    mapper.readTree(AtomicPut.readUtf8(fs, p))
   }
 
   /** Resolve the CURRENT metadata file: the `version-hint.text`
@@ -127,9 +126,7 @@ object IcebergCompat {
       s"not an Iceberg table (no metadata/ dir): $tablePath")
     val hint = new Path(metaDir, "version-hint.text")
     if (fs.exists(hint)) {
-      val in = fs.open(hint)
-      val n = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim finally in.close()
+      val n = AtomicPut.readUtf8(fs, hint).trim
       val p = new Path(metaDir, s"v$n.metadata.json")
       if (fs.exists(p)) return p
       // stale hint: fall through to the directory scan
@@ -1361,12 +1358,7 @@ object IcebergCompat {
     val mlPath = new Path(metaDir, s"snap-$newSnapId.avro")
     writeAvro(spark, mlPath, manifestListSchema, mlRecs)
     // new metadata version: same everything, one more snapshot
-    val metaTxt = {
-      val in = fs.open(metaPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val node = mapper.readTree(metaTxt)
+    val node = mapper.readTree(AtomicPut.readUtf8(fs, metaPath))
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     node.put("current-snapshot-id", newSnapId)
     node.put("last-sequence-number", newSnapId)

@@ -107,6 +107,15 @@ object AtomicPut {
     }
   }
 
+  /** The whole object at `path` as UTF-8 text: the read side of the
+    * small metadata objects graft publishes (manifests, tags, leases,
+    * catalog and index pointers). The caller checks existence. */
+  def readUtf8(fs: FileSystem, path: Path): String = {
+    val in = fs.open(path)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    finally in.close()
+  }
+
   private def putIfAbsentLocal(fs: FileSystem, path: Path,
       bytes: Array[Byte]): Unit = {
     val target = Paths.get(path.toUri.getPath)

@@ -120,6 +120,33 @@ class DeltaCommitSpec extends SparkSpec {
       .select("id").head.getLong(0)
     assert(VersionedTable.readPointLookup(spark, root, "id", anyV1Id)
       .count() >= 1L)
+    // the sequence goes on until its manifests carry every line tag: a
+    // constraint, an optimistic `d` pointer, a deletion vector, an
+    // ALTER `h` line and an equality delete
+    VersionedTable.addConstraint(spark, root, "k_nonneg", "k >= 0",
+      keepVersions = 8)
+    VersionedTable.appendDeltaOptimistic(spark, root, keepVersions = 8,
+      statsCols = Seq("k"), bloomCols = Seq("id")) { stage =>
+      Seq((9002L, 2L, 88888L)).toDF("k", "v", "id")
+        .coalesce(1).write.parquet(stage)
+    }
+    VersionedTable.deleteWhere(spark, root, col("k") === 5L,
+      keepVersions = 8)
+    VersionedTable.addColumn(spark, root, "note",
+      org.apache.spark.sql.types.StringType, keepVersions = 8)
+    VersionedTable.deleteByKey(spark, root, Seq(7L).toDF("k"), Seq("k"),
+      keepVersions = 8)
+    assert(VersionedTable.read(spark, root).count() == 4000L)
+    // every manifest re-renders to its exact bytes
+    val bodies = fs(root).listStatus(new Path(s"$root/_commits")).toSeq
+      .map(st => graft.util.AtomicPut.readUtf8(fs(root), st.getPath))
+    assert(bodies.size == 7)
+    bodies.foreach { b =>
+      val m = VersionedTable.Manifest.parse(b)
+      assert(VersionedTable.Manifest.render(m) == b, s"re-render of\n$b")
+    }
+    val tags = bodies.flatMap(_.split("\n").tail.map(_.takeWhile(_ != '\t')))
+    assert(tags.toSet == Set("d", "h", "k", "s", "b", "dv", "ed", "f"))
   }
 
   test("appendDelta without statsCols still copies carried stats; new file scans conservatively") {

@@ -3,6 +3,7 @@ package graft
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, FileNotFoundException, IOException, OutputStream}
 import java.net.URI
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs._
@@ -23,6 +24,7 @@ import graft.util.ConditionalPut
   * out of production. */
 final class InMemoryObjectStore {
   private[graft] val objects = new ConcurrentHashMap[String, Array[Byte]]()
+  private val gets = new ConcurrentHashMap[String, AtomicLong]()
 
   /** Store-native conditional PUT: atomic, one winner. */
   def putIfNoneMatch(key: String, bytes: Array[Byte]): Boolean =
@@ -31,8 +33,18 @@ final class InMemoryObjectStore {
   def put(key: String, bytes: Array[Byte]): Unit =
     objects.put(key, bytes.clone())
 
-  def get(key: String): Option[Array[Byte]] =
+  /** Whole-object GET; counted per key (see [[getCount]]). */
+  def get(key: String): Option[Array[Byte]] = {
+    gets.computeIfAbsent(key, _ => new AtomicLong()).incrementAndGet()
     Option(objects.get(key)).map(_.clone())
+  }
+
+  /** GETs issued for `key` so far, present or not. */
+  def getCount(key: String): Long =
+    Option(gets.get(key)).map(_.get).getOrElse(0L)
+
+  /** Object size without fetching it (a HEAD request; not a GET). */
+  def head(key: String): Option[Int] = Option(objects.get(key)).map(_.length)
 
   def delete(key: String): Boolean = objects.remove(key) != null
 
@@ -187,10 +199,9 @@ class MockS3FileSystem extends FileSystem {
 
   override def getFileStatus(f: Path): FileStatus = {
     val k = key(f)
-    store.get(k) match {
-      case Some(bytes) =>
-        new FileStatus(bytes.length, false, 1, 64 << 20, 0L,
-          makeQualified(f))
+    store.head(k) match {
+      case Some(size) =>
+        new FileStatus(size, false, 1, 64 << 20, 0L, makeQualified(f))
       case None =>
         if (k.isEmpty || store.keys(k + "/").nonEmpty)
           new FileStatus(0, true, 1, 64 << 20, 0L, makeQualified(f))

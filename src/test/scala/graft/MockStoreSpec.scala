@@ -192,6 +192,26 @@ class MockStoreSpec extends SparkSpec {
     assert(n == 10L || n == 11L, s"current 'a' must be a winner's: $n")
   }
 
+  test("VersionedTable.read of a file-list version with a deletion " +
+      "vector fetches its _commits object exactly once") {
+    AtomicPut.register("mock3a", MockObjectStore.conditionalPut)
+    mockFs("onefetch")
+    import graft.lakehouse.VersionedTable
+    val root = "mock3a://onefetch/t"
+    VersionedTable.initDelta(spark, root,
+      spark.range(0, 100).toDF("k").coalesce(2), statsCols = Seq("k"))
+    VersionedTable.deleteWhere(spark, root, col("k") < 10L)
+    val v = VersionedTable.currentVersion(spark, root).get
+    assert(VersionedTable.filesOf(spark, root, v).nonEmpty)
+    assert(VersionedTable.deleteVectors(spark, root, v).nonEmpty)
+    val store = MockObjectStore.bucket("onefetch")
+    val before = store.getCount(s"t/_commits/$v")
+    val df = VersionedTable.read(spark, root)
+    assert(store.getCount(s"t/_commits/$v") - before == 1L,
+      "read fetched the manifest more than once")
+    assert(df.count() == 90L)
+  }
+
   test("two daemons over the mock store: concurrent leased ticks load " +
       "every drop exactly once into a versioned table on mock3a://") {
     AtomicPut.register("mock3a", MockObjectStore.conditionalPut)

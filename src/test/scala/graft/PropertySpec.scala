@@ -1698,4 +1698,85 @@ class PropertySpec extends SparkSpec {
     }
     check(prop, 12)
   }
+
+  test("property: the manifest codec round-trips adversarial text — " +
+      "parse(render(m)) == m") {
+    import graft.lakehouse.VersionedTable.{EqDelete, FileStat, Manifest}
+    import org.apache.spark.sql.types._
+    // every text field mixes the characters the codec escapes or marks:
+    // tab, newline, backslash, the literal NULL marker, non-ASCII
+    val genText = Gen.frequency(
+      (2, Gen.alphaNumStr.map(_.take(8))),
+      (5, Gen.chooseNum(0, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf(
+        "\t", "\n", "\\", "\\N", "\\t", "é", "日本", "ß", " ", ",",
+        "a", "Z", "_v-3/part-0.parquet"))).map(_.mkString)))
+    val genName = genText.filter(_.nonEmpty)
+    def distinctOf[A](g: Gen[A], max: Int) =
+      Gen.chooseNum(0, max).flatMap(Gen.listOfN(_, g)).map(_.distinct)
+    // sections are sorted by rendered line, so a generated manifest is
+    // canonical when each sequence already is
+    def inLineOrder[A](xs: Seq[A])(one: A => Manifest): Seq[A] =
+      xs.sortBy(x => Manifest.render(one(x)))
+    val genSchema = for {
+      names <- distinctOf(genName, 4).suchThat(_.nonEmpty)
+      fields <- Gen.sequence[Seq[StructField], StructField](names.map(n =>
+        for {
+          dt <- Gen.oneOf[DataType](LongType, StringType, DoubleType,
+            StructType(Seq(StructField("x", IntegerType))))
+          nullable <- Gen.oneOf(true, false)
+          prev <- distinctOf(genName, 2)
+        } yield StructField(n, dt, nullable,
+          if (prev.isEmpty) Metadata.empty
+          else new MetadataBuilder()
+            .putStringArray("graft.prev", prev.toArray).build())))
+      dropped <- Gen.listOf(genText).map(_.take(3))
+    } yield (StructType(fields), dropped)
+    val genStat = for {
+      file <- genText
+      rows <- Gen.chooseNum(0L, Long.MaxValue)
+      cols <- distinctOf(genText, 3).suchThat(_.nonEmpty)
+      ranges <- Gen.listOfN(cols.size, Gen.zip(Gen.option(genText),
+        Gen.option(genText), Gen.chooseNum(0L, 1000L)))
+    } yield FileStat(file, rows,
+      cols.zip(ranges.map(_._1)).toMap, cols.zip(ranges.map(_._2)).toMap,
+      cols.zip(ranges.map(_._3)).toMap)
+    val genBloom = for {
+      file <- genText; c <- genText
+      bits <- Gen.oneOf(8, 64, 8192); k <- Gen.chooseNum(1, 16)
+      set <- Gen.listOf(Gen.chooseNum(0, bits - 1))
+    } yield {
+      val bs = new java.util.BitSet(bits)
+      set.foreach(bs.set)
+      (file, c) -> (bits, k, bs)
+    }
+    val genEd = for {
+      ref <- genText; seq <- Gen.chooseNum(0L, 1L << 40)
+      keys <- distinctOf(genName.map(_.replace(",", "")).filter(_.nonEmpty),
+        3).suchThat(_.nonEmpty)
+      count <- Gen.chooseNum(0L, 1L << 40)
+    } yield EqDelete(ref, seq, keys, count)
+    val genManifest = for {
+      version <- Gen.chooseNum(1L, Long.MaxValue)
+      dataDir <- Gen.option(genText)
+      schema <- Gen.option(genSchema)
+      constraints <- distinctOf(Gen.zip(genName, genText), 3)
+      stats <- distinctOf(genStat, 4)
+      blooms <- distinctOf(genBloom, 4)
+      dvs <- distinctOf(Gen.zip(genText, Gen.zip(genText,
+        Gen.chooseNum(0L, 1L << 40))), 4)
+      eds <- distinctOf(genEd, 3)
+      files <- distinctOf(genText, 6)
+    } yield Manifest(version, dataDir, schema,
+      inLineOrder(constraints)(c => Manifest(0, constraints = Seq(c))),
+      stats.groupBy(_.file).values.map(_.head).toSeq.sortBy(_.file),
+      blooms.toMap, dvs.toMap,
+      inLineOrder(eds)(e => Manifest(0, eqDeletes = Seq(e))),
+      inLineOrder(files)(f => Manifest(0, files = Seq(f))))
+    val prop = Prop.forAll(genManifest) { m =>
+      val back = Manifest.parse(Manifest.render(m))
+      assert(back == m, s"\n  rendered ${Manifest.render(m)}\n  parsed $back")
+      true
+    }
+    check(prop, 300)
+  }
 }
