@@ -326,10 +326,16 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
     * idempotently: missing marker → reprocess, find the objects
     * already published, reuse, re-mark. Files process in sorted
     * order, so a later batch in the same tick dedups against an
-    * earlier batch's just-published postings. */
+    * earlier batch's just-published postings.
+    *
+    * The curation plan runs once per batch: the corpus object's write.
+    * The kept count (its footer), the history postings, the blob
+    * fingerprints, the ANN diff and the retrieval fold all read the
+    * published corpus object, and the gram-df fold reads the published
+    * postings object — only when this call published it, so a replay
+    * never folds a batch twice. */
   private def maintainCorpus(
       cc: Automation.CorpusDedupConfig): Automation.CorpusReport = {
-    import org.apache.spark.sql.SaveMode
     import org.apache.spark.sql.functions.col
     val load = IncrementalLoader.run(spark, cc.srcDir, cc.rawTableDir,
       cc.registryDir, cc.schema, cc.format)
@@ -376,10 +382,10 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
         if (!havePostings) batchDeduped
         else {
           // prefix ranking reads the maintained (gram, df) view — no
-          // O(history) aggregate per batch. Folds below are
-          // at-least-once (a crash replay may re-fold one batch): an
-          // inflated df only perturbs the rarity heuristic, the
-          // survivor set is decided by the exact verify.
+          // O(history) aggregate per batch. The fold below is
+          // at-most-once (see there): a missing df only perturbs the
+          // rarity heuristic, the survivor set is decided by the
+          // exact verify.
           val dfView =
             if (VersionedTable.currentVersion(spark, cc.gramDfDir).isDefined)
               Some(MaterializedAgg
@@ -390,7 +396,8 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
           graft.operators.TextOps.nearDupAgainstHistory(
             spark.read.parquet(cc.postingsDir), batchDeduped, cc.t, dfView)
         }
-      val nFresh = raw.count()
+      val nFresh = graft.util.AtomicPut.parquetRows(fs,
+        new org.apache.hadoop.fs.Path(rawLive, name))
       // optional DSIR stage: fold the batch's token counts into the
       // maintained importance model (DsirView — KBs at any corpus
       // size), then keep each survivor w.p. min(1, exp(logw)) via the
@@ -472,22 +479,28 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
             Seq("doc_id"), "left_anti")
         selected.join(keep.select("doc_id"), Seq("doc_id"), "left_semi")
       }
-      val nKept = publishObject(fs, curated, cc.corpusDataDir, s"batch-$tag")
+      val corpusObj = publishObject(fs, curated, cc.corpusDataDir, tag)._1
+      val published = spark.read.parquet(corpusObj.toString)
+      val nKept = graft.util.AtomicPut.parquetRows(fs, corpusObj)
       // history postings cover the PUBLISHED set: near-dup history
       // must mirror what is actually in the corpus
-      val survivorPostings =
-        graft.operators.TextOps.historyPostings(curated)
-      publishObject(fs, survivorPostings, cc.postingsDir, s"batch-$tag")
+      val (postingsObj, postingsNew) = publishObject(fs,
+        graft.operators.TextOps.historyPostings(published), cc.postingsDir, tag)
       // fingerprint history mirrors the corpus too: published
       // survivors' fps append per batch (crash replay reuses the
       // published object — at most one fp object per tag)
       cc.blobDedup.foreach { bc =>
         publishObject(fs, graft.operators.Multimodal.fingerprintBlobs(
-          curated, bc.column, bc.modality), bc.fpDir, s"batch-$tag")
+          published, bc.column, bc.modality), bc.fpDir, tag)
       }
-      MaterializedAgg.update(spark, cc.gramDfDir,
-        survivorPostings.select(col("gram")),
-        MaterializedAgg.Spec(Seq("gram"), Nil))
+      // the gram-df fold is at-most-once: it runs only when THIS call
+      // published the postings object, so a crash replay never folds
+      // a batch twice; a crash between the postings publish and this
+      // fold leaves the batch's grams unfolded (rarity heuristic only)
+      if (postingsNew)
+        MaterializedAgg.update(spark, cc.gramDfDir,
+          spark.read.parquet(postingsObj.toString).select(col("gram")),
+          MaterializedAgg.Spec(Seq("gram"), Nil))
       // ANN coupling: a document the curation stages dropped THIS
       // batch must vanish from the maintained vector index's search
       // results the same tick — tombstone its vector
@@ -496,18 +509,15 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
       // crash replay re-appends the same ids; reads and vacuum dedup
       // the tombstone set, so the replay stays idempotent. The index
       // rewrite itself happens on the annVacuumEvery cadence below.
+      // Every curation stage is a filter or semi/anti join of `raw`,
+      // so nKept == nFresh means nothing was dropped: no diff to run.
       cc.annIndexPath.foreach { ix =>
-        if (graft.operators.VectorIndex.exists(spark, ix)) {
-          // diff against the PUBLISHED object, not the lazy `selected`
-          // plan: the gram-df commit above may have GC'd the view
-          // version that plan's prefix-ranking stage read, and the
-          // published object is also what a crash replay actually kept.
-          // Diff from the RAW batch: a model-gated doc is a curation
+        if (nKept < nFresh && graft.operators.VectorIndex.exists(spark, ix)) {
+          // diff from the RAW batch: a model-gated doc is a curation
           // drop too — its vector must vanish like a dedup drop's
           val droppedIds = raw
             .select(col("doc_id").cast("long").as("vec_id")).distinct()
-            .join(spark.read.parquet(s"${cc.corpusDataDir}/batch-$tag.parquet")
-              .select(col("doc_id").cast("long").as("vec_id"))
+            .join(published.select(col("doc_id").cast("long").as("vec_id"))
               .distinct(), Seq("vec_id"), "left_anti")
           val nd = droppedIds.count()
           if (nd > 0) graft.operators.VectorIndex.remove(spark, ix, droppedIds)
@@ -542,8 +552,7 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
         // with a catalog configured, fold history is retained to the
         // catalog's keep so snapshot readers can searchAt pinned
         // retrieval versions (the keepVersions-trails-readers contract)
-        RetrievalView.update(spark, rx,
-          spark.read.parquet(s"${cc.corpusDataDir}/batch-$tag.parquet"), id,
+        RetrievalView.update(spark, rx, published, id,
           keepVersions = cfg.catalog.map(_.keep).getOrElse(1))
       }
       // marker LAST: its existence = this raw file fully processed;
@@ -637,26 +646,16 @@ class Automation(spark: SparkSession, cfg: Automation.Config) {
       annRemoved, annVacuumed, modelGen)
   }
 
-  /** Stage `df` and publish it as ONE parquet object `<name>.parquet`
-    * under `dir` — the IncrementalLoader publish pattern (single-object
-    * moves appear atomically everywhere; a crashed attempt's object is
-    * reused, never duplicated). Returns the row count. */
+  /** Publish `df` as the one object `batch-<tag>.parquet` under `dir`
+    * ([[graft.util.AtomicPut.publishParquet]]: a crashed attempt's
+    * object is reused, never duplicated). Returns the object's path and
+    * whether this call published it. */
   private def publishObject(fs: org.apache.hadoop.fs.FileSystem,
-      df: org.apache.spark.sql.DataFrame, dir: String, name: String): Long = {
-    import org.apache.spark.sql.SaveMode
-    val target = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
-    val stageDir = new org.apache.hadoop.fs.Path(s"$dir/_staging/$name")
-    val n = df.count()
-    if (!fs.exists(target)) {
-      df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stageDir.toString)
-      val part = fs.listStatus(stageDir)
-        .find(_.getPath.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part under $stageDir"))
-        .getPath
-      require(fs.rename(part, target), s"publish $part -> $target failed")
-      fs.delete(stageDir, true)
-    }
-    n
+      df: org.apache.spark.sql.DataFrame, dir: String,
+      tag: String): (org.apache.hadoop.fs.Path, Boolean) = {
+    val target = new org.apache.hadoop.fs.Path(dir, s"batch-$tag.parquet")
+    (target, graft.util.AtomicPut.publishParquet(fs, df,
+      new org.apache.hadoop.fs.Path(s"$dir/_staging/batch-$tag"), target))
   }
 
   /** Embedding-table maintenance: incremental-load new vector drops,

@@ -1,7 +1,7 @@
 package graft.lakehouse
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -103,61 +103,42 @@ object IncrementalLoader {
           case "json" => reader.json(f) // JSON-lines, one object per line
           case other  => reader.format(other).load(f)
         }
-        val n = df.count()
-        val tag = publishedTag(f)
         // the audit half of write-audit-publish: the batch is gated
         // BEFORE anything becomes visible — a rejected drop never
         // reaches the table, and quarantine is terminal (the registry
         // keeps it from retrying; the source file stays for triage)
         val bad = audit.map(_(df)).getOrElse(Nil)
         if (bad.nonEmpty) {
-          (f, LoadRegistry.StatusQuarantined, n, bad)
+          (f, LoadRegistry.StatusQuarantined, df.count(), bad)
         } else if (isDelta) {
+          val n = df.count()
           // a crash between the manifest PUT and the registry write
           // re-runs this load: the current manifest already references
           // this source's deterministic file name → no second append
           val already = VersionedTable.currentFiles(spark, tableDir)
             .exists(_.endsWith(s"/${publishedName(f)}"))
-          def writeBatch(stage: String): Unit = {
-            df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage)
-            val part = fs.listStatus(new Path(stage))
-              .find(_.getPath.getName.startsWith("part-"))
-              .getOrElse(throw new IllegalStateException(
-                s"no part file under $stage")).getPath
-            require(fs.rename(part, new Path(stage, publishedName(f))),
-              s"rename $part -> ${publishedName(f)} failed")
-          }
           if (!already) {
             // optimistic: multi-writer cooperation — a racing loader's
             // commit rebases this one (staged bytes reused), and a race
             // on the SAME source file no-ops by deterministic name
             if (optimistic)
               VersionedTable.appendDeltaOptimistic(spark, tableDir,
-                keepVersions, dedupeNewByName = true)(writeBatch)
+                keepVersions, dedupeNewByName = true)(writeNamed(fs, df, f))
             else
               VersionedTable.appendDelta(spark, tableDir,
-                keepVersions)(writeBatch)
+                keepVersions)(writeNamed(fs, df, f))
           }
           (f, LoadRegistry.StatusOk, n, Nil)
         } else {
-        val stage = new Path(s"$tableDir/_staging/$tag")
-        df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
-        val part = fs.listStatus(stage)
-          .find(_.getPath.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no part file under $stage"))
-          .getPath
-        val target = new Path(liveDir, s"ingest-$tag.snappy.parquet")
-        // A crashed earlier attempt may have already published this
-        // exact content (the name is source-path-deterministic, and a
-        // single-object publish appears atomically on posix, hdfs, AND
-        // object stores — multi-file dir renames are the non-atomic
-        // case). Reuse it: delete-then-rename would open a window with
-        // the rows missing from the table.
-        if (!fs.exists(target)) {
-          require(fs.rename(part, target), s"publish $part -> $target failed")
-        }
-        fs.delete(stage, true)
-        (f, LoadRegistry.StatusOk, n, Nil)
+          // an existing target is a crashed attempt's publish of this
+          // exact content (source-path-deterministic name): reused, never
+          // deleted and renamed again. n comes from the object's footer,
+          // so the source is parsed once.
+          val target = new Path(liveDir, publishedName(f))
+          graft.util.AtomicPut.publishParquet(fs, df,
+            new Path(s"$tableDir/_staging/${publishedTag(f)}"), target)
+          (f, LoadRegistry.StatusOk,
+            graft.util.AtomicPut.parquetRows(fs, target), Nil)
         }
       } catch {
         // a declared table CHECK constraint rejected the batch: the
@@ -181,6 +162,16 @@ object IncrementalLoader {
       quarantined = results.collect {
         case (f, LoadRegistry.StatusQuarantined, _, bad) => (f, bad)
       })
+  }
+
+  /** Write `df` into a VersionedTable stage dir as the one file named
+    * [[publishedName]]`(f)` — the deterministic name crash replays and
+    * optimistic rebases recognise. */
+  private def writeNamed(fs: FileSystem, df: DataFrame, f: String)(
+      stage: String): Unit = {
+    val part = graft.util.AtomicPut.writeOnePart(fs, df, new Path(stage))
+    require(fs.rename(part, new Path(stage, publishedName(f))),
+      s"rename $part -> ${publishedName(f)} failed")
   }
 
   // ---- branch-gated loads: whole-load write–audit–publish ----------
@@ -226,16 +217,8 @@ object IncrementalLoader {
         val already = VersionedTable.branchFiles(spark, tableDir, branch)
           .exists(_.endsWith(s"/${publishedName(f)}"))
         if (!already)
-          VersionedTable.appendToBranchWith(spark, tableDir, branch) {
-            stage =>
-              df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage)
-              val part = fs.listStatus(new Path(stage))
-                .find(_.getPath.getName.startsWith("part-"))
-                .getOrElse(throw new IllegalStateException(
-                  s"no part file under $stage")).getPath
-              require(fs.rename(part, new Path(stage, publishedName(f))),
-                s"rename $part -> ${publishedName(f)} failed")
-          }
+          VersionedTable.appendToBranchWith(spark, tableDir, branch)(
+            writeNamed(fs, df, f))
         (f, LoadRegistry.StatusStaged, n, Seq.empty[String])
       } catch {
         case e: VersionedTable.ConstraintViolatedException =>

@@ -43,24 +43,13 @@ object RetrievalView {
     org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
 
-  /** Stage `df` and publish it as the ONE object `<dir>/batch-<id>
-    * .parquet` (single-object moves appear atomically; an existing
-    * target is a crashed attempt's completed publish — reused). */
+  /** Publish `df` as the ONE object `<dir>/batch-<id>.parquet`
+    * ([[graft.util.AtomicPut.publishParquet]]: an existing target is a
+    * crashed attempt's completed publish — reused). */
   private def publishObject(spark: SparkSession, df: DataFrame,
-      dir: String, id: Long): Unit = {
-    val fs = fsOf(spark, dir)
-    val target = new Path(dir, s"batch-$id.parquet")
-    if (fs.exists(target)) return
-    val stageDir = new Path(s"$dir/_staging/batch-$id")
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stageDir.toString)
-    val part = fs.listStatus(stageDir)
-      .find(_.getPath.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part under $stageDir"))
-      .getPath
-    fs.mkdirs(new Path(dir))
-    require(fs.rename(part, target), s"publish $part -> $target failed")
-    fs.delete(stageDir, true)
-  }
+      dir: String, id: Long): Unit =
+    graft.util.AtomicPut.publishParquet(fsOf(spark, dir), df,
+      new Path(s"$dir/_staging/batch-$id"), new Path(dir, s"batch-$id.parquet"))
 
   /** Fold one document batch into the index at `root`. Returns false
     * when `batchId` was already fully folded (re-delivery). */

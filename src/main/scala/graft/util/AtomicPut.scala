@@ -4,6 +4,9 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Conditional-PUT capability for object stores: atomically create the
   * object iff absent (the `If-None-Match: *` contract of S3 / GCS /
@@ -105,6 +108,38 @@ object AtomicPut {
             s"$TrustCreateExclusiveKey=true if the adapter is verified " +
             s"to map create(false) to a conditional PUT.")
     }
+  }
+
+  /** Publish `df` as the ONE parquet object `target`: one part file
+    * written under `stage`, then renamed onto `target` (a single-object
+    * move appears atomically on posix, hdfs and object stores). An
+    * existing `target` is a crashed attempt's completed publish: it is
+    * reused and `df` is not evaluated. Returns true iff this call
+    * published. */
+  def publishParquet(fs: FileSystem, df: DataFrame, stage: Path,
+      target: Path): Boolean = {
+    if (fs.exists(target)) return false
+    val part = writeOnePart(fs, df, stage)
+    fs.mkdirs(target.getParent)
+    require(fs.rename(part, target), s"publish $part -> $target failed")
+    fs.delete(stage, true)
+    true
+  }
+
+  /** Write `df` as one parquet part file under the directory `stage`
+    * (replacing whatever was there) and return that part's path. */
+  def writeOnePart(fs: FileSystem, df: DataFrame, stage: Path): Path = {
+    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    fs.listStatus(stage).find(_.getPath.getName.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(s"no part file under $stage"))
+      .getPath
+  }
+
+  /** Row count of the parquet object at `path`, from its footer alone:
+    * no Spark job, no column read. */
+  def parquetRows(fs: FileSystem, path: Path): Long = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, fs.getConf))
+    try r.getRecordCount finally r.close()
   }
 
   /** The whole object at `path` as UTF-8 text: the read side of the

@@ -788,14 +788,16 @@ class LakehouseSpec extends SparkSpec {
     // idle tick: nothing new to process
     val r3 = auto.tick()
     assert(r3.corpus.get.batches == 0)
-    // crash replay: lose a done marker — the batch reprocesses but the
-    // already-published objects are reused, so the corpus is unchanged
-    // (filter: the local FS also writes hidden .crc siblings)
-    val done = new java.io.File(s"$root/corpus/_done").listFiles()
-      .filter(_.getName.startsWith("done-")).head
-    assert(done.delete())
+    // crash replay: lose d2's done marker — the batch reprocesses but
+    // the already-published objects are reused, so the corpus is
+    // unchanged, and the report counts the published object ({13} kept)
+    val d2Tag = IncrementalLoader.publishedTag(
+      new org.apache.hadoop.fs.Path(s"$root/drops/d2.json").toUri.getPath)
+    assert(new java.io.File(s"$root/corpus/_done/done-$d2Tag").delete())
     val r4 = auto.tick()
     assert(r4.corpus.get.batches == 1)
+    assert(r4.corpus.get.kept == 1 && r4.corpus.get.dropped == 3,
+      s"replay report ${r4.corpus.get}")
     val corpus2 = spark.read.parquet(s"$root/corpus/data").select("doc_id")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(corpus2 == corpus)
@@ -810,6 +812,62 @@ class LakehouseSpec extends SparkSpec {
       .groupBy("gram").count().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(viewDf == recount && viewDf.nonEmpty)
+  }
+
+  test("corpus tick job count: the curated plan runs once per batch") {
+    val root = tmpDir("corpusjobs")
+    val cc = Automation.CorpusDedupConfig(
+      srcDir = s"$root/drops", rawTableDir = s"$root/raw",
+      registryDir = s"$root/reg", corpusDir = s"$root/corpus",
+      postingsDir = s"$root/postings")
+    val auto = new Automation(spark, Automation.Config(
+      srcDir = s"$root/arrivals", tableDir = s"$root/survey",
+      registryDir = s"$root/sreg", generate = false, corpusDedup = Some(cc)))
+    new java.io.File(s"$root/drops").mkdirs()
+    new java.io.File(s"$root/arrivals").mkdirs()
+    def drop(name: String, texts: Seq[(Int, String)]): Unit =
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$root/drops/$name"),
+        texts.map { case (id, t) =>
+          s"""{"doc_id": $id, "text": "$t", "lang": "en", "source": "s"}"""
+        }.mkString("\n").getBytes("UTF-8"))
+    def words(w: String) = (1 to 30).map(i => s"$w$i").mkString(" ")
+    drop("d1.json", Seq(1 -> words("alpha"), 2 -> words("beta")))
+    auto.tick() // history: corpus, postings and the gram-df view exist
+    drop("d2.json", Seq(11 -> s"${words("alpha")} zz", 12 -> words("gamma"),
+      13 -> words("delta")))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // AQE off: adaptive execution splits one action into several
+    // query-stage jobs, which would make the count nondeterministic
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    spark.sparkContext.addSparkListener(listener)
+    val r = try {
+      val r = auto.tick()
+      var last = -1; var same = 0
+      while (same < 3) {
+        Thread.sleep(100)
+        val now = jobs.get()
+        if (now == last) same += 1 else { same = 0; last = now }
+      }
+      r
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set(key, prev)
+    }
+    assert(r.corpus.get.kept == 2 && r.corpus.get.dropped == 1)
+    // one evaluation of the curated plan (the corpus write) instead of
+    // five (count + write for the corpus and for the postings object,
+    // and the gram-df fold's input), and row counts from parquet
+    // footers: 26 jobs, against 68 when every publish and the fold
+    // re-ran the plan
+    assert(jobs.get() <= 32, s"corpus tick ran ${jobs.get()} jobs")
   }
 
   test("curation blob dedup: re-uploaded and re-encoded images drop " +
